@@ -115,6 +115,13 @@ object SimQueries {
   private def vecsShared(s: SparkSession, d: String): DataFrame =
     shared(s, d, "vecs")(withNorm(s, d).graftBarrier)
 
+  /** The corpus vector count: one memoized scalar per (session, dir),
+    * shared by every code-width, cell-count and fit-sampling decision. */
+  private def nvecs(s: SparkSession, d: String): Long =
+    shared(s, d, "nvecs") {
+      java.lang.Long.valueOf(vecsShared(s, d).count())
+    }.longValue()
+
   /** Shared deterministic k-means fit: (centroids, checkpointed
     * assignment). Trained once per session+dir; the IVF index and the
     * SemDeDup pass are two consumers of the same coarse quantizer —
@@ -122,8 +129,7 @@ object SimQueries {
   private def kmeansShared(s: SparkSession, d: String)
       : (DataFrame, DataFrame) =
     shared(s, d, "kmeans") {
-      val vecs = vecsShared(s, d)
-      val (c2, asg) = kmeansFit(vecs)
+      val (c2, asg) = kmeansFit(s, d)
       (c2, asg.graftBarrier)
     }
 
@@ -348,9 +354,7 @@ object SimQueries {
     * dependent by design and deterministic for a fixed corpus. The
     * count probe is one memoized scalar per (session, dir). */
   def simNeardupTopk(s: SparkSession, d: String): DataFrame = {
-    val n = shared(s, d, "nvecs") {
-      java.lang.Long.valueOf(vecsShared(s, d).count())
-    }.longValue()
+    val n = nvecs(s, d)
     simNeardupTopkAt(s, d, bits = neardupTopkBits(n), k = 5)
   }
 
@@ -620,8 +624,9 @@ object SimQueries {
     * the SemDeDup pass: K = 16 fixed-vec_id seeds, two exact Lloyd
     * iterations. Returns (final centroids ("cluster","cemb","c_n2s"),
     * final assignment ("vec_id","cluster")). */
-  private def kmeansFit(vecs: DataFrame): (DataFrame, DataFrame) =
-    kmeansFitAt(vecs, seedMax = 400L)
+  private def kmeansFit(s: SparkSession, d: String)
+      : (DataFrame, DataFrame) =
+    kmeansFitAt(s, d, seedMax = 400L)
 
   /** The same fit with a parameterized seed bound: seeds are every
     * vec_id % 25 = 0 below `seedMax`, i.e. K = seedMax/25 centroids on
@@ -629,8 +634,9 @@ object SimQueries {
     * bound — identical truncation in the oracle). The fixed fit pins
     * seedMax = 400 (K = 16) for the oracle-shared consumers; the
     * occupancy-scaled IVF passes 25·K(n). */
-  private def kmeansFitAt(vecs: DataFrame,
+  private def kmeansFitAt(s: SparkSession, d: String,
       seedMax: Long): (DataFrame, DataFrame) = {
+    val vecs = vecsShared(s, d)
     // assignment of every `src` vector to its nearest centroid,
     // exact-integer: argmin via min(struct(d2s, cluster)) — the same
     // (d2s, cluster) total order the previous window form used, but
@@ -668,7 +674,7 @@ object SimQueries {
     // gates sit entirely in that regime; at the 100× replica the
     // fixed fit trains on n/48 and the scaled fit on n/3.
     val k = math.max(1L, seedMax / 25L)
-    val n = vecs.count()
+    val n = nvecs(s, d)
     val m = math.max(1L, n / (256L * k))
     val train = if (m > 1) vecs.filter(col("vec_id") % m === 0)
                 else vecs
@@ -740,14 +746,12 @@ object SimQueries {
     * (picks K), not a data collect. */
   private def kmeansScaledShared(s: SparkSession, d: String)
       : (Int, DataFrame, DataFrame) = {
-    val n = shared(s, d, "nvecs") {
-      java.lang.Long.valueOf(vecsShared(s, d).count())
-    }.longValue()
+    val n = nvecs(s, d)
     val k = ivfK(n)
     val (c2, asg) =
       if (k == 16) kmeansShared(s, d)
       else shared(s, d, s"kmeans-k$k") {
-        val (c, a) = kmeansFitAt(vecsShared(s, d), seedMax = 25L * k)
+        val (c, a) = kmeansFitAt(s, d, seedMax = 25L * k)
         (c, a.graftBarrier)
       }
     (k, c2, asg)
@@ -1004,8 +1008,8 @@ object SimQueries {
     *
     * This pass reuses [[kmeansFit]] (the IVF coarse quantizer — same
     * deterministic seeds, same exact-integer Lloyd iterations) and
-    * [[graft.graph.GraphOps.connectedComponents]] (the same star
-    * algorithm the text cluster query uses) — the two kernels compose.
+    * [[graft.graph.GraphOps.connectedComponents]] (the same CC the
+    * text cluster query uses) — the two kernels compose.
     * Within-cluster pairs at cos ≥ 0.4 form the edge set; the keeper is
     * the min vec_id of each component.
     *
@@ -1053,9 +1057,7 @@ object SimQueries {
     * count is the memoized nvecs scalar the scaled fit already plans
     * with — no extra job. */
   private def quadraticGuard(s: SparkSession, d: String): Unit = {
-    val n = shared(s, d, "nvecs") {
-      java.lang.Long.valueOf(vecsShared(s, d).count())
-    }.longValue()
+    val n = nvecs(s, d)
     if (ivfK(n) > 16 &&
         !s.conf.get("spark.graft.allowQuadratic", "false").toBoolean)
       throw new IllegalStateException(
@@ -1639,9 +1641,7 @@ object SimQueries {
     * identical width from count(*), so the gate checks whatever width
     * the scale implies. */
   def simAnnPqRerank(s: SparkSession, d: String): DataFrame = {
-    val n = shared(s, d, "nvecs") {
-      java.lang.Long.valueOf(vecsShared(s, d).count())
-    }.longValue()
+    val n = nvecs(s, d)
     val R = math.max(50L, math.ceil(n / 40.0).toLong)
     val vecs = vecsShared(s, d)
     val short = pqAdc(s, d).groupBy("qid")

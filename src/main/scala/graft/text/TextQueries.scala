@@ -99,8 +99,8 @@ object TextQueries {
       .orderBy("d1", "d2")
   }
 
-  /** Package access to the shared verified pair set (tools/CcProbe and
-    * the composed [[DedupPipeline]]). */
+  /** Package access to the shared verified pair set (the composed
+    * [[DedupPipeline]]). */
   private[graft] def minhashPairsProbe(s: SparkSession, d: String): DataFrame =
     minhashPairsShared(s, d)
 
@@ -426,8 +426,7 @@ object TextQueries {
     * tiers answer "which docs are near-duplicates of each other"; a
     * dedup pass needs "which ONE of each group survives". Connected
     * components over the verified minhash pair graph
-    * ([[graft.graph.GraphOps.connectedComponents]], alternating
-    * large-star/small-star) assigns every document a canonical
+    * ([[graft.graph.GraphOps.connectedComponents]]) assigns every document a canonical
     * representative — the min doc_id reachable through near-dup links,
     * so transitive chains (A~B, B~C, A≁C) still collapse to one keeper,
     * which pairwise filtering alone cannot express.
@@ -437,8 +436,9 @@ object TextQueries {
     * representative). `SELECT ... WHERE keep` is the deduplicated
     * corpus.
     *
-    * Scale: the CC input is the verified pair set (≪ corpus); rounds
-    * are O(log² n) keyed shuffles of that small set. The label join
+    * Scale: the CC input is the verified pair set (≪ corpus): one
+    * collect and a driver union-find below GraphOps' edge floor,
+    * O(log² n) keyed-shuffle star rounds above it. The label join
     * back to `documents` is keyed by doc_id and AQE sizes the
     * (checkpointed, runtime-known) label side — in practice a
     * broadcast, since only near-dup members carry labels. */

@@ -57,7 +57,7 @@ class BarrierModeSpec extends AnyFunSuite {
     val edges = (0L until 63L).map(i => (i, i + 1))
     def run(s: org.apache.spark.sql.SparkSession): Seq[(Long, Long)] = {
       import s.implicits._
-      graft.graph.GraphOps.connectedComponents(
+      graft.graph.GraphOps.starComponents(
         edges.toDF("a", "b"))
         .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
     }

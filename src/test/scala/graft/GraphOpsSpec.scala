@@ -151,4 +151,52 @@ class GraphOpsSpec extends AnyFunSuite {
     assert(pJobs <= iJobs,
       s"probe jobs $pJobs > intersect jobs $iJobs")
   }
+
+  // ---- both CC paths on every graph above --------------------------
+  // connectedComponents takes the driver union-find below
+  // GraphOps.DriverEdgeFloor (every graph here); starComponents runs the
+  // large-star/small-star rounds on the same input. Both must equal the
+  // oracle, so neither path can drift while the other carries the suite.
+
+  private val bothPathGraphs: Seq[(String, Seq[(Long, Long)])] = {
+    val rnd = new scala.util.Random(42)
+    Seq(
+      "256-node path" -> (0L until 255L).map(i => (i, i + 1)),
+      "random 300-edge graph" ->
+        Seq.fill(300)((rnd.nextInt(200).toLong, rnd.nextInt(200).toLong))
+          .filter { case (a, b) => a != b },
+      "duplicate, reversed and self-loop edges" ->
+        Seq((1L, 2L), (2L, 1L), (1L, 2L), (3L, 3L), (4L, 5L)),
+      "empty edge set" -> Seq.empty[(Long, Long)],
+      "two stars joined by a bridge" ->
+        ((1L to 5L).map(i => (0L, i)) ++ (11L to 15L).map(i => (10L, i)) :+
+          ((5L, 11L))))
+  }
+
+  for ((name, edges) <- bothPathGraphs)
+    test(s"driver union-find and star rounds both match union-find: $name") {
+      // self-loops carry no edge, so their nodes are not labeled
+      val want = ufComponents(edges.filter { case (a, b) => a != b })
+      val df = edges.toDF("a", "b")
+      val driver = GraphOps.connectedComponents(df)
+      assert(driver.queryExecution.logical.isInstanceOf[
+        org.apache.spark.sql.catalyst.plans.logical.LocalRelation],
+        s"$name: below the floor CC must return the driver's local relation")
+      assert(driver.as[(Long, Long)].collect().toMap == want, name)
+      assert(GraphOps.starComponents(df).as[(Long, Long)].collect().toMap
+        == want, name)
+    }
+
+  test("the bounded collect keeps at most the cap and reports overflow") {
+    // 20 edges over 4 partitions: a cap below a partition's share, a
+    // cap one short of the total, and a cap that holds them all
+    val edges = (0L until 20L).map(i => (i, i + 100)).toDF("lo", "hi")
+      .repartition(4).localCheckpoint()
+    def kept(cap: Int) =
+      GraphOps.collectUpTo(edges, cap).map(_.flatMap(_.grouped(2)
+        .map(p => (p(0), p(1)))).toSet)
+    assert(kept(3).isEmpty)
+    assert(kept(19).isEmpty)
+    assert(kept(20).contains((0L until 20L).map(i => (i, i + 100)).toSet))
+  }
 }

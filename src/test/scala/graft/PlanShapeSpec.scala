@@ -29,7 +29,8 @@ class PlanShapeSpec extends AnyFunSuite {
     val p = planOf(name)
     def c(pat: String) = pat.r.findAllIn(p).length
     Map("exchanges" -> c("Exchange"), "smj" -> c("SortMergeJoin"),
-      "bhj" -> c("BroadcastHashJoin"), "hashagg" -> c("HashAggregate"),
+      "bhj" -> c("BroadcastHashJoin"),
+      "bnlj" -> c("BroadcastNestedLoopJoin"), "hashagg" -> c("HashAggregate"),
       "objagg" -> c("ObjectHashAggregate"), "generate" -> c("Generate"),
       "window" -> c("Window"))
   }
@@ -66,15 +67,44 @@ class PlanShapeSpec extends AnyFunSuite {
   test("q_lang_id_ngram: profile rides a BROADCAST join (never a " +
     "shuffled one); only the final doc-aligned left join may " +
     "sort-merge") {
+    import org.apache.spark.sql.catalyst.optimizer.{BuildLeft, BuildRight}
+    import org.apache.spark.sql.execution.GenerateExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
     val c = counts("q_lang_id_ngram")
     // floor: gram checkpoint repartition, profile groupBy + rank,
-    // hit groupBy, best rank, final join + presentation sort. The
-    // load-bearing property is the profile join: top-20-per-language
-    // is a tiny dimension and must broadcast — a shuffled gram join
-    // would move every (doc, gram) row a second time.
+    // per-language gather, best rank, final join + presentation sort.
+    // The load-bearing property is the profile join: top-20-per-
+    // language is a tiny dimension and must broadcast — a shuffled
+    // gram join would move every (doc, gram) row a second time. Since
+    // r21 the profile is one gram-array row per language, broadcast-
+    // cross-joined against the per-doc gram arrays (a nested-loop
+    // join, no hash key), so the pin is on its sides, not on bhj.
     assert(c("exchanges") <= 7, c.toString)
-    assert(c("bhj") >= 1, c.toString)
+    assert(c("bnlj") == 1, c.toString)
     assert(c("smj") <= 1, c.toString)
+    val plan = SparkEntry.queries("q_lang_id_ngram")(spark, SparkTestBase.sf)
+      .queryExecution.executedPlan
+    val h = new AdaptiveSparkPlanHelper {}
+    val j = h.collect(plan) { case j: BroadcastNestedLoopJoinExec => j }.head
+    val (build, hits) = j.buildSide match {
+      case BuildLeft => (j.left, j.right)
+      case BuildRight => (j.right, j.left)
+    }
+    // the build side is the #langs-row profile: its topmost aggregate
+    // is keyed on the language alone, and it carries no corpus column
+    assert(build.output.map(_.name).toSet == Set("plang", "pgrams"),
+      build.treeString)
+    assert(h.collect(build) { case a: BaseAggregateExec =>
+        a.groupingExpressions.map(_.name) }.headOption.contains(Seq("plang")),
+      build.treeString)
+    assert(hits.output.map(_.name).contains("gs"), hits.treeString)
+    // every explode is the profile's; the hits side stays corpus-sized
+    def generates(p: org.apache.spark.sql.execution.SparkPlan) =
+      h.collect(p) { case g: GenerateExec => g }.size
+    assert(generates(hits) == 0, hits.treeString)
+    assert(generates(plan) == generates(build), plan.treeString)
   }
 
   test("q_span_dedup: fingerprint-keyed plan budget — no sort-merge " +
