@@ -13,16 +13,17 @@ import scala.jdk.CollectionConverters._
   * PAIRS; an actual dedup pass needs CLUSTERS — "these 5 docs are one
   * group, keep the canonical one". The bridge is connected components
   * over the pair graph, computed on one of two paths chosen from the
-  * size of the pinned, canonical edge set alone:
+  * pinned, canonical edge set alone (no setting):
   *
-  *  - at most [[DriverEdgeFloor]] edges: ONE job collects the edges,
-  *    a union-find on the driver labels every node with its
-  *    component minimum, and the labels come back as a local relation.
+  *  - at most [[DriverEdgeFloor]] edges, and no partition holding more
+  *    than its equal share of them: ONE job collects the edges, a
+  *    union-find on the driver labels every node with its component
+  *    minimum, and the labels come back as a local relation.
   *    The edge set entering CC is the OUTPUT of a near-dup tier —
   *    bounded by verified pairs, orders of magnitude smaller than the
   *    corpus — so this is the common case, and it replaces a chain of
   *    ~8 stage-jobs per star round (under AQE) with one.
-  *  - above the floor: the alternating large-star/small-star of
+  *  - otherwise: the alternating large-star/small-star of
   *    Kiveris et al., "Connected Components in MapReduce and Beyond"
   *    (SOCC '14), the only path that works for edge sets larger than
   *    the driver can hold. Every round is a pair of keyed aggregations
@@ -47,7 +48,8 @@ import scala.jdk.CollectionConverters._
   */
 object GraphOps {
 
-  /** Largest pinned edge set the driver path takes. Sized on a 4-core
+  /** Largest pinned edge set the driver path takes (each partition may
+    * hold only its equal share of it: [[collectUpTo]]). Sized on a 4-core
     * local JVM over random graphs (0.71 nodes per edge): at the floor
     * (262,142 edges, 187,070 nodes) the collect took 0.07–0.27 s, the
     * union-find 0.17–0.20 s and the local relation 0.14–0.15 s, with
@@ -126,34 +128,40 @@ object GraphOps {
   }
 
   /** The pinned edges as packed (lo, hi, lo, hi, ...) blocks, or None
-    * when there are more than `cap` of them. ONE job over the pinned
-    * blocks: each partition ships at most cap + 1 edges, and the driver
-    * drops everything it holds once the running total passes the cap,
-    * so the collect never holds more than ~cap edges plus the blocks
-    * in flight. */
+    * when they do not fit the driver's budget of `cap` edges. ONE job
+    * over the pinned blocks, in which every partition gets an equal
+    * share, cap / numPartitions edges: a partition within its share
+    * ships its edges, one over it ships only an overflow marker (it
+    * stops reading at share + 1), and any marker means None. So at
+    * most `cap` edges ever reach the driver — received, not just kept
+    * — whatever the set's size or partition count, and the job's
+    * results stay far below spark.driver.maxResultSize (16 B per edge,
+    * 4 MB at the floor). A set within the cap but skewed past one
+    * partition's share gets None too: the star rounds then label it,
+    * slower but exact. */
   private[graft] def collectUpTo(edges: DataFrame,
       cap: Int): Option[Seq[Array[Long]]] = {
     val rdd = edges.queryExecution.toRdd
+    val share = cap / math.max(1, rdd.getNumPartitions)
     val kept = scala.collection.mutable.ArrayBuffer.empty[Array[Long]]
-    var total = 0L
+    var overflow = false
     edges.sparkSession.sparkContext.runJob(rdd,
       (it: Iterator[InternalRow]) => {
         val b = Array.newBuilder[Long]
         var n = 0
-        while (n <= cap && it.hasNext) {
+        while (n <= share && it.hasNext) {
           val r = it.next()
           b += r.getLong(0)
           b += r.getLong(1)
           n += 1
         }
-        b.result()
+        if (n > share) None else Some(b.result())
       },
-      (_: Int, packed: Array[Long]) => {
-        total += packed.length / 2
-        if (total > cap) kept.clear() else kept += packed
-        ()
+      (_: Int, packed: Option[Array[Long]]) => packed match {
+        case Some(a) => kept += a
+        case None => overflow = true
       })
-    if (total > cap) None else Some(kept.toSeq)
+    if (overflow) None else Some(kept.toSeq)
   }
 
   /** Union-find over packed canonical edges, on the driver: (nodes,

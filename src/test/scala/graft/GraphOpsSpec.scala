@@ -187,16 +187,34 @@ class GraphOpsSpec extends AnyFunSuite {
         == want, name)
     }
 
-  test("the bounded collect keeps at most the cap and reports overflow") {
-    // 20 edges over 4 partitions: a cap below a partition's share, a
-    // cap one short of the total, and a cap that holds them all
-    val edges = (0L until 20L).map(i => (i, i + 100)).toDF("lo", "hi")
-      .repartition(4).localCheckpoint()
-    def kept(cap: Int) =
-      GraphOps.collectUpTo(edges, cap).map(_.flatMap(_.grouped(2)
-        .map(p => (p(0), p(1)))).toSet)
-    assert(kept(3).isEmpty)
-    assert(kept(19).isEmpty)
-    assert(kept(20).contains((0L until 20L).map(i => (i, i + 100)).toSet))
+  test("the bounded collect ships at most each partition's share of " +
+    "the cap and reports overflow") {
+    val sc = spark.sparkContext
+    val want = (0L until 20L).map(i => (i, i + 100))
+    def kept(rdd: org.apache.spark.rdd.RDD[(Long, Long)], cap: Int) =
+      GraphOps.collectUpTo(rdd.toDF("lo", "hi").localCheckpoint(), cap)
+        .map(_.flatMap(_.grouped(2).map(p => (p(0), p(1)))).toSet)
+    // 20 edges, 5 in each of 4 partitions: a cap whose share (0) is
+    // below every partition, a cap one short of the total (share 4),
+    // and a cap that holds them all (share 5)
+    val even = sc.parallelize(want, 4)
+    assert(kept(even, 3).isEmpty)
+    assert(kept(even, 19).isEmpty)
+    assert(kept(even, 20).contains(want.toSet))
+    // the same 20 edges all in one of 4 partitions: within a cap of
+    // 80 (share 20), but past the share of a cap of 40 (share 10) even
+    // though the total fits, so that partition overflows
+    val skewed = sc.parallelize(want, 1)
+      .union(sc.parallelize(Seq.empty[(Long, Long)], 3))
+    assert(skewed.getNumPartitions == 4)
+    assert(kept(skewed, 80).contains(want.toSet))
+    assert(kept(skewed, 40).isEmpty)
+    // partitions of 1, 1 and 18 edges: a cap of 54 (share 18) holds
+    // them all; at 53 (share 17) the one overflowing partition means
+    // None though the other two fit
+    val mixed = sc.parallelize(want.take(2), 2)
+      .union(sc.parallelize(want.drop(2), 1))
+    assert(kept(mixed, 54).contains(want.toSet))
+    assert(kept(mixed, 53).isEmpty)
   }
 }
