@@ -3,12 +3,9 @@ package graft.sources
 import java.util
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.sources.{DataSourceRegister, EqualTo, Filter, GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual}
+import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader}
+import org.apache.spark.sql.connector.write.{LogicalWriteInfo, WriteBuilder}
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
 /** DataSourceV2 connector for the Tinker archive format (`.arc`,
@@ -30,40 +27,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * Options: `chunks`, `unit_scale` (default 0.1: Å → nm), `mode`
   * (shared ParseMode contract). `path` may be a file or a directory
   * of `*.arc[.gz]` shards. */
-class ArcDataSource extends TableProvider with DataSourceRegister {
+class ArcDataSource extends FrameSource {
   override def shortName(): String = "arc"
-
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    ArcTable.Schema
-
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: util.Map[String, String]): Table = {
-    val paths = MultiPath.rawPaths("arc", properties)
-    val chunks = Option(properties.get("chunks")).map { v =>
-      try v.toInt catch {
-        case _: NumberFormatException => throw new IllegalArgumentException(
-          s"arc option 'chunks' must be an integer, got '$v'")
-      }
-    }.getOrElse(10)
-    if (chunks <= 0) throw new IllegalArgumentException(
-      s"arc option 'chunks' must be > 0, got $chunks")
-    val unitScale = Option(properties.get("unit_scale")).map { v =>
-      try v.toDouble catch {
-        case _: NumberFormatException => throw new IllegalArgumentException(
-          s"arc option 'unit_scale' must be numeric, got '$v'")
-      }
-    }.getOrElse(0.1)
-    val mode = ParseMode.fromOptions("arc", properties)
-    if (schema != null) {
-      val want = ArcTable.Schema.fields.map(f => (f.name, f.dataType)).toSeq
-      val got = schema.fields.map(f => (f.name, f.dataType)).toSeq
-      if (got != want) throw new IllegalArgumentException(
-        "arc source has a fixed schema " + ArcTable.Schema.simpleString +
-          "; the supplied read schema " + schema.simpleString +
-          " does not match (drop .schema(...) or make it identical)")
-    }
-    new ArcTable(paths, chunks, unitScale, mode)
-  }
+  override def schema: StructType = ArcTable.Schema
+  override def unitScale: Option[Double] = Some(0.1)
+  override def codec(opts: FrameOptions,
+      props: util.Map[String, String]): FrameCodec = new ArcCodec(opts)
 }
 
 object ArcTable {
@@ -91,157 +60,45 @@ object ArcTable {
   }
 }
 
-class ArcTable(paths: Seq[String], chunks: Int, unitScale: Double,
-    mode: String)
-    extends Table with SupportsRead
-    with org.apache.spark.sql.connector.catalog.SupportsWrite {
-  override def name(): String = s"arc:${paths.mkString(",")}"
-  override def schema(): StructType = ArcTable.Schema
-  override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.BATCH_WRITE,
-      TableCapability.TRUNCATE, TableCapability.MICRO_BATCH_READ)
-  override def newScanBuilder(options: CaseInsensitiveStringMap)
-      : ScanBuilder = new ArcScanBuilder(paths, chunks, unitScale, mode)
-  override def newWriteBuilder(
-      info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
-      : org.apache.spark.sql.connector.write.WriteBuilder =
-    new ArcWriteBuilder(MultiPath.single("arc", paths, "write"), unitScale, info)
-}
-
-class ArcScanBuilder(paths: Seq[String], chunks: Int, unitScale: Double,
-    mode: String) extends ScanBuilder
-    with SupportsPushDownRequiredColumns with SupportsPushDownFilters
-    with SupportsPushDownLimit {
-  private var required: StructType = ArcTable.Schema
-  private var frameLo: Long = 0L
-  private var frameHi: Long = Long.MaxValue
-  private var limit: Int = -1
-  private var pushed: Array[Filter] = Array.empty
-
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    required = requiredSchema
-
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    filters.foreach {
-      case EqualTo("frame_id", v: Long) =>
-        frameLo = math.max(frameLo, v); frameHi = math.min(frameHi, v + 1)
-      case GreaterThan("frame_id", v: Long) =>
-        frameLo = math.max(frameLo, v + 1)
-      case GreaterThanOrEqual("frame_id", v: Long) =>
-        frameLo = math.max(frameLo, v)
-      case LessThan("frame_id", v: Long) =>
-        frameHi = math.min(frameHi, v)
-      case LessThanOrEqual("frame_id", v: Long) =>
-        frameHi = math.min(frameHi, v + 1)
-      case _ => ()
-    }
-    pushed = filters.filter {
-      case EqualTo("frame_id", _) | GreaterThan("frame_id", _) |
-           GreaterThanOrEqual("frame_id", _) | LessThan("frame_id", _) |
-           LessThanOrEqual("frame_id", _) => true
-      case _ => false
-    }
-    filters
-  }
-  override def pushedFilters(): Array[Filter] = pushed
-
-  override def pushLimit(l: Int): Boolean = { limit = l; false }
-
-  override def build(): Scan =
-    new ArcScan(paths, chunks, unitScale, required, frameLo, frameHi,
-      limit, mode)
-}
-
-case class ArcFrameRange(startFrame: Long, endFrame: Long, nAtoms: Int,
-    hasBox: Boolean, filePath: String = null, frameOffset: Long = 0L)
-    extends InputPartition
-
-class ArcScan(paths: Seq[String], chunks: Int, unitScale: Double,
-    required: StructType, frameLo: Long, frameHi: Long, limit: Int,
-    mode: String) extends Scan with Batch {
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
-
-  /** Streaming twin (see ArcMicroBatchStream). */
-  override def toMicroBatchStream(checkpointLocation: String)
-      : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    new ArcMicroBatchStream(
-      MultiPath.single("arc", paths, "streaming read"),
-      chunks, unitScale, required, mode)
-
-  /** Frame count of one file (streaming offset bookkeeping). */
-  private[sources] def planFrameCount(p: String): Long = probe(p)._3
+class ArcCodec(opts: FrameOptions) extends FrameCodec(opts) {
+  override def exts: Seq[String] = Seq(".arc", ".arc.gz")
 
   /** Driver-side probe: natoms from the header, box presence from the
     * structure of the second line, frames from the line count. */
-  private def probe(p: String): (Int, Boolean, Long) = {
+  override def probe(p: String, maxFrames: Long): FileFrames = {
     val src = XyzLines.open(p)
-    try {
+    val (nAtoms, hasBox, nFrames) = try {
       val it = src.getLines()
-      if (!it.hasNext) return (0, false, 0L)
-      val nAtoms = it.next().trim.split("\\s+")(0).toInt
-      if (!it.hasNext) return (nAtoms, false, 0L)
-      val hasBox = ArcTable.isBoxLine(it.next())
-      var lines = 2L
-      while (it.hasNext) { it.next(); lines += 1 }
-      val fl = nAtoms + 1 + (if (hasBox) 1 else 0)
-      (nAtoms, hasBox, lines / fl)
-    } finally src.close()
-  }
-
-  private def planFile(p: String, nAtoms: Int, hasBox: Boolean,
-      nFrames: Long, off: Long, rowBudget: Long)
-      : (Seq[InputPartition], Long) = {
-    var lo = math.max(off, frameLo)
-    var hi = math.min(off + nFrames, frameHi)
-    if (rowBudget != Long.MaxValue && nAtoms > 0) {
-      val needed = (rowBudget + nAtoms - 1) / nAtoms
-      hi = math.min(hi, lo + math.max(needed, 1L))
-    }
-    if (lo >= hi || nAtoms <= 0) return (Nil, 0L)
-    val parts = (lo until hi by chunks.toLong).map { start =>
-      ArcFrameRange(start - off, math.min(start + chunks, hi) - off,
-        nAtoms, hasBox, p, off): InputPartition
-    }
-    (parts, (hi - lo) * nAtoms)
-  }
-
-  override def planInputPartitions(): Array[InputPartition] = {
-    // files/directories/lists/globs -> one ordered file list with
-    // globally contiguous frame ids (see XyzScan / MultiPath)
-    val files = MultiPath.expandAll("arc", paths, Seq(".arc", ".arc.gz"))
-    val budget0 = if (limit >= 0) limit.toLong else Long.MaxValue
-    val out = scala.collection.mutable.ArrayBuffer.empty[InputPartition]
-    var off = 0L
-    var budget = budget0
-    files.foreach { p =>
-      if (budget > 0 && off < frameHi) {
-        val (nAtoms, hasBox, nFrames) = probe(p)
-        val (parts, rows) = planFile(p, nAtoms, hasBox, nFrames, off,
-          budget)
-        out ++= parts
-        if (budget != Long.MaxValue) budget = math.max(0L, budget - rows)
-        off += nFrames
+      if (!it.hasNext) (0, false, 0L)
+      else {
+        val nAtoms = it.next().trim.split("\\s+")(0).toInt
+        if (!it.hasNext) (nAtoms, false, 0L)
+        else {
+          val hasBox = ArcTable.isBoxLine(it.next())
+          var lines = 2L
+          while (it.hasNext) { it.next(); lines += 1 }
+          (nAtoms, hasBox, lines / (nAtoms + 1 + (if (hasBox) 1 else 0)))
+        }
       }
-    }
-    out.toArray
+    } finally src.close()
+    FileFrames.uniform(nFrames, nAtoms)(
+      ArcFrameRange(_, _, nAtoms, hasBox, p, _))
   }
 
-  override def supportedCustomMetrics()
-      : Array[org.apache.spark.sql.connector.metric.CustomMetric] =
-    ParseMode.scanMetrics
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    new ArcReaderFactory(unitScale, required, mode)
-}
-
-class ArcReaderFactory(unitScale: Double, required: StructType,
-    mode: String) extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition)
+  override def reader(p: InputPartition, required: StructType)
       : PartitionReader[InternalRow] =
-    new ArcPartitionReader(unitScale, required,
-      partition.asInstanceOf[ArcFrameRange], mode)
+    new ArcPartitionReader(opts.unitScale, required,
+      p.asInstanceOf[ArcFrameRange], opts.mode)
+
+  override def sink: Option[(String, LogicalWriteInfo) => WriteBuilder] =
+    Some(new ArcWriteBuilder(_, opts.unitScale, _))
 }
+
+/** startFrame/endFrame are LOCAL to `filePath`; `frameOffset` is the
+  * global frame id of the file's frame 0. */
+case class ArcFrameRange(startFrame: Long, endFrame: Long, nAtoms: Int,
+    hasBox: Boolean, filePath: String, frameOffset: Long)
+    extends InputPartition
 
 class ArcPartitionReader(unitScale: Double, required: StructType,
     range: ArcFrameRange, mode: String)

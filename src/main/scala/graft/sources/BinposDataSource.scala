@@ -5,12 +5,9 @@ import java.nio.{ByteBuffer, ByteOrder}
 import java.util
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.sources.{DataSourceRegister, EqualTo, Filter, GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual}
+import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader}
+import org.apache.spark.sql.connector.write.{LogicalWriteInfo, WriteBuilder}
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 /** DataSourceV2 connector for the Scripps/AMBER binpos binary format
   * (`.binpos`, reference registry `file_returns[".binpos"]` = xyz
@@ -26,43 +23,14 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * shards (name order, globally contiguous frame ids). Frames whose
   * natoms field disagrees with the first frame fail the task (variable
   * atom counts are not supported, matching the other sources). */
-class BinposDataSource extends TableProvider with DataSourceRegister {
+class BinposDataSource extends FrameSource {
   override def shortName(): String = "binpos"
-
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    BinposTable.Schema
-
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: util.Map[String, String]): Table = {
-    val paths = MultiPath.rawPaths("binpos", properties)
-    val chunks = Option(properties.get("chunks")).map { v =>
-      try v.toInt catch {
-        case _: NumberFormatException => throw new IllegalArgumentException(
-          s"binpos option 'chunks' must be an integer, got '$v'")
-      }
-    }.getOrElse(10)
-    if (chunks <= 0) throw new IllegalArgumentException(
-      s"binpos option 'chunks' must be > 0, got $chunks")
-    val unitScale = Option(properties.get("unit_scale")).map { v =>
-      try v.toDouble catch {
-        case _: NumberFormatException => throw new IllegalArgumentException(
-          s"binpos option 'unit_scale' must be numeric, got '$v'")
-      }
-    }.getOrElse(0.1)
-    if (schema != null) {
-      val want =
-        BinposTable.Schema.fields.map(f => (f.name, f.dataType)).toSeq
-      val got = schema.fields.map(f => (f.name, f.dataType)).toSeq
-      if (got != want) throw new IllegalArgumentException(
-        "binpos source has a fixed schema " +
-          BinposTable.Schema.simpleString +
-          "; the supplied read schema " + schema.simpleString +
-          " does not match (drop .schema(...) or make it identical)")
-    }
-    val expectAtoms = Option(properties.get("top"))
-      .map(PdbTopology.atomCount).getOrElse(-1)
-    new BinposTable(paths, chunks, unitScale, expectAtoms)
-  }
+  override def schema: StructType = BinposTable.Schema
+  override def unitScale: Option[Double] = Some(0.1)
+  override def modes: Seq[String] = Seq(ParseMode.FailFast)
+  override def codec(opts: FrameOptions,
+      props: util.Map[String, String]): FrameCodec =
+    new BinposCodec(opts, topAtoms(props))
 }
 
 object BinposTable {
@@ -102,152 +70,40 @@ object BinposTable {
   }
 }
 
-class BinposTable(paths: Seq[String], chunks: Int, unitScale: Double,
-    expectAtoms: Int = -1)
-    extends Table with SupportsRead
-    with org.apache.spark.sql.connector.catalog.SupportsWrite {
-  override def name(): String = s"binpos:${paths.mkString(",")}"
-  override def schema(): StructType = BinposTable.Schema
-  override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.BATCH_WRITE,
-      TableCapability.TRUNCATE, TableCapability.MICRO_BATCH_READ)
-  override def newScanBuilder(options: CaseInsensitiveStringMap)
-      : ScanBuilder =
-    new BinposScanBuilder(paths, chunks, unitScale, expectAtoms)
-  override def newWriteBuilder(
-      info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
-      : org.apache.spark.sql.connector.write.WriteBuilder =
-    new BinposWriteBuilder(MultiPath.single("binpos", paths, "write"), unitScale, info)
-}
+/** `expectAtoms` is the `top=` topology's atom count (-1: no `top`). */
+class BinposCodec(opts: FrameOptions, expectAtoms: Int)
+    extends FrameCodec(opts) {
+  override def exts: Seq[String] = Seq(".binpos")
 
-class BinposScanBuilder(paths: Seq[String], chunks: Int,
-    unitScale: Double, expectAtoms: Int = -1)
-    extends ScanBuilder with SupportsPushDownRequiredColumns
-    with SupportsPushDownFilters with SupportsPushDownLimit {
-  private var required: StructType = BinposTable.Schema
-  private var frameLo: Long = 0L
-  private var frameHi: Long = Long.MaxValue
-  private var limit: Int = -1
-  private var pushed: Array[Filter] = Array.empty
+  /** binpos carries natoms in its header; `top` is a plan-time
+    * cross-check against the topology's first-model atom count. It
+    * covers EVERY file the load names — including files limit/frame
+    * pruning will never read (same contract as inpcrd, which validates
+    * per file read): a trailing shard whose header disagrees with the
+    * topology is a corrupt dataset, and hiding that behind a small limit
+    * would let it surface only in the one query that happens to read far
+    * enough. Each check is one 8-byte header read, only when `top` is
+    * given. */
+  override def checkFiles(files: Seq[String]): Unit =
+    checkTop(files, expectAtoms)(BinposTable.probe(_)._1)
 
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    required = requiredSchema
-
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    filters.foreach {
-      case EqualTo("frame_id", v: Long) =>
-        frameLo = math.max(frameLo, v); frameHi = math.min(frameHi, v + 1)
-      case GreaterThan("frame_id", v: Long) =>
-        frameLo = math.max(frameLo, v + 1)
-      case GreaterThanOrEqual("frame_id", v: Long) =>
-        frameLo = math.max(frameLo, v)
-      case LessThan("frame_id", v: Long) =>
-        frameHi = math.min(frameHi, v)
-      case LessThanOrEqual("frame_id", v: Long) =>
-        frameHi = math.min(frameHi, v + 1)
-      case _ => ()
-    }
-    pushed = filters.filter {
-      case EqualTo("frame_id", _) | GreaterThan("frame_id", _) |
-           GreaterThanOrEqual("frame_id", _) | LessThan("frame_id", _) |
-           LessThanOrEqual("frame_id", _) => true
-      case _ => false
-    }
-    filters
+  override def probe(p: String, maxFrames: Long): FileFrames = {
+    val (nAtoms, nFrames) = BinposTable.probe(p)
+    FileFrames.uniform(nFrames, nAtoms)(BinposFrameRange(_, _, nAtoms, p, _))
   }
-  override def pushedFilters(): Array[Filter] = pushed
 
-  override def pushLimit(l: Int): Boolean = { limit = l; false }
+  override def reader(p: InputPartition, required: StructType)
+      : PartitionReader[InternalRow] =
+    new BinposPartitionReader(opts.unitScale, required,
+      p.asInstanceOf[BinposFrameRange])
 
-  override def build(): Scan =
-    new BinposScan(paths, chunks, unitScale, required, frameLo, frameHi,
-      limit, expectAtoms)
+  override def sink: Option[(String, LogicalWriteInfo) => WriteBuilder] =
+    Some(new BinposWriteBuilder(_, opts.unitScale, _))
 }
 
 case class BinposFrameRange(startFrame: Long, endFrame: Long,
     nAtoms: Int, filePath: String, frameOffset: Long)
     extends InputPartition
-
-class BinposScan(paths: Seq[String], chunks: Int, unitScale: Double,
-    required: StructType, frameLo: Long, frameHi: Long, limit: Int,
-    expectAtoms: Int = -1)
-    extends Scan with Batch {
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
-
-  /** Streaming twin (see BinposMicroBatchStream). */
-  override def toMicroBatchStream(checkpointLocation: String)
-      : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    new BinposMicroBatchStream(
-      MultiPath.single("binpos", paths, "streaming read"),
-      chunks, unitScale, required)
-
-  private def planFile(p: String, nAtoms: Int, nFrames: Long, off: Long,
-      rowBudget: Long): (Seq[InputPartition], Long) = {
-    var lo = math.max(off, frameLo)
-    var hi = math.min(off + nFrames, frameHi)
-    if (rowBudget != Long.MaxValue && nAtoms > 0) {
-      val needed = (rowBudget + nAtoms - 1) / nAtoms
-      hi = math.min(hi, lo + math.max(needed, 1L))
-    }
-    if (lo >= hi || nAtoms <= 0) return (Nil, 0L)
-    val parts = (lo until hi by chunks.toLong).map { start =>
-      BinposFrameRange(start - off, math.min(start + chunks, hi) - off,
-        nAtoms, p, off): InputPartition
-    }
-    (parts, (hi - lo) * nAtoms)
-  }
-
-  override def planInputPartitions(): Array[InputPartition] = {
-    // files/directories/lists/globs -> one ordered file list with
-    // globally contiguous frame ids (see XyzScan / MultiPath); the
-    // per-file probe is a header read + length arithmetic
-    val files = MultiPath.expandAll("binpos", paths, Seq(".binpos"))
-    val budget0 = if (limit >= 0) limit.toLong else Long.MaxValue
-    val out = scala.collection.mutable.ArrayBuffer.empty[InputPartition]
-    var off = 0L
-    var budget = budget0
-    files.foreach { p =>
-      val wantPlan = budget > 0 && off < frameHi
-      // binpos carries natoms in its header; `top` is a plan-time
-      // cross-check against the topology's first-model atom count.
-      // The check covers EVERY file the load names — including files
-      // limit/frame pruning will never read (same contract as inpcrd,
-      // which validates per file read): a trailing shard whose header
-      // disagrees with the topology is a corrupt dataset, and hiding
-      // that behind a small limit would let it surface only in the
-      // one query that happens to read far enough. The probe is a
-      // header read + length arithmetic, so validating pruned files
-      // costs one 8-byte read each, only when `top` is given.
-      if (wantPlan || expectAtoms > 0) {
-        val (nAtoms, nFrames) = BinposTable.probe(p)
-        if (expectAtoms > 0 && nAtoms != expectAtoms)
-          throw new IllegalArgumentException(
-            s"binpos $p: natoms $nAtoms disagrees with the topology " +
-              s"atom count $expectAtoms (option 'top')")
-        if (wantPlan) {
-          val (parts, rows) = planFile(p, nAtoms, nFrames, off, budget)
-          out ++= parts
-          if (budget != Long.MaxValue)
-            budget = math.max(0L, budget - rows)
-        }
-        off += nFrames
-      }
-    }
-    out.toArray
-  }
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    new BinposReaderFactory(unitScale, required)
-}
-
-class BinposReaderFactory(unitScale: Double, required: StructType)
-    extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition)
-      : PartitionReader[InternalRow] =
-    new BinposPartitionReader(unitScale, required,
-      partition.asInstanceOf[BinposFrameRange])
-}
 
 /** Seeks to the partition's first frame by stride arithmetic, then
   * reads whole frames into a buffer. */

@@ -5,12 +5,8 @@ import java.nio.{ByteBuffer, ByteOrder}
 import java.util
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.sources.{DataSourceRegister, EqualTo, Filter, GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual}
+import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader}
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 /** Parsed DCD file header — everything the planner needs to turn the
   * file into seek-addressable fixed-size frame records. Parsed ONCE on
@@ -153,39 +149,13 @@ private[sources] object DcdHeader {
   *
   * Usage: `spark.read.format("dcd").option("chunks", 100).load(path)`.
   */
-class DcdDataSource extends TableProvider with DataSourceRegister {
+class DcdDataSource extends FrameSource {
   override def shortName(): String = "dcd"
-
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    DcdTable.Schema
-
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: util.Map[String, String]): Table = {
-    val paths = MultiPath.rawPaths("dcd", properties)
-    val chunks = Option(properties.get("chunks")).map { v =>
-      try v.toInt catch {
-        case _: NumberFormatException => throw new IllegalArgumentException(
-          s"dcd option 'chunks' must be an integer, got '$v'")
-      }
-    }.getOrElse(10)
-    if (chunks <= 0) throw new IllegalArgumentException(
-      s"dcd option 'chunks' must be > 0, got $chunks")
-    val unitScale = Option(properties.get("unit_scale")).map { v =>
-      try v.toDouble catch {
-        case _: NumberFormatException => throw new IllegalArgumentException(
-          s"dcd option 'unit_scale' must be numeric, got '$v'")
-      }
-    }.getOrElse(0.1) // Å→nm, the reference's in_units_of default
-    val mode = ParseMode.fromOptions("dcd", properties)
-    if (schema != null) {
-      val want = DcdTable.Schema.fields.map(f => (f.name, f.dataType)).toSeq
-      val got = schema.fields.map(f => (f.name, f.dataType)).toSeq
-      if (got != want) throw new IllegalArgumentException(
-        "dcd source has a fixed schema " + DcdTable.Schema.simpleString +
-          "; the supplied read schema does not match")
-    }
-    new DcdTable(paths, chunks, unitScale, mode)
-  }
+  override def schema: StructType = DcdTable.Schema
+  // Å→nm, the reference's in_units_of default
+  override def unitScale: Option[Double] = Some(0.1)
+  override def codec(opts: FrameOptions,
+      props: util.Map[String, String]): FrameCodec = new DcdCodec(opts)
 }
 
 object DcdTable {
@@ -206,142 +176,27 @@ object DcdTable {
     StructField("box_gamma", FloatType, nullable = true)))
 }
 
-class DcdTable(paths: Seq[String], chunks: Int, unitScale: Double,
-    mode: String)
-    extends Table with SupportsRead {
-  override def name(): String = s"dcd:${paths.mkString(",")}"
-  override def schema(): StructType = DcdTable.Schema
-  override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_READ,
-      TableCapability.MICRO_BATCH_READ)
-  override def newScanBuilder(options: CaseInsensitiveStringMap)
-      : ScanBuilder = new DcdScanBuilder(paths, chunks, unitScale, mode)
-}
+class DcdCodec(opts: FrameOptions) extends FrameCodec(opts) {
+  override def exts: Seq[String] = Seq(".dcd")
 
-class DcdScanBuilder(paths: Seq[String], chunks: Int, unitScale: Double,
-    mode: String)
-    extends ScanBuilder with SupportsPushDownRequiredColumns
-    with SupportsPushDownFilters with SupportsPushDownLimit {
-  private var required: StructType = DcdTable.Schema
-  private var frameLo: Long = 0L
-  private var frameHi: Long = Long.MaxValue // exclusive
-  private var limit: Int = -1
-  private var pushed: Array[Filter] = Array.empty
-
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    required = requiredSchema
-
-  /** frame_id predicates shrink the planned range — and because frames
-    * are fixed-size byte records, pruning here skips file bytes exactly
-    * (the chunk pruning of SURVEY O3/O5 on its natural format). All
-    * filters are returned as residuals so Spark re-applies them. */
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    filters.foreach {
-      case EqualTo("frame_id", v: Long) =>
-        frameLo = math.max(frameLo, v); frameHi = math.min(frameHi, v + 1)
-      case GreaterThan("frame_id", v: Long) =>
-        frameLo = math.max(frameLo, v + 1)
-      case GreaterThanOrEqual("frame_id", v: Long) =>
-        frameLo = math.max(frameLo, v)
-      case LessThan("frame_id", v: Long) =>
-        frameHi = math.min(frameHi, v)
-      case LessThanOrEqual("frame_id", v: Long) =>
-        frameHi = math.min(frameHi, v + 1)
-      case _ => ()
-    }
-    pushed = filters.filter {
-      case EqualTo("frame_id", _) | GreaterThan("frame_id", _) |
-           GreaterThanOrEqual("frame_id", _) | LessThan("frame_id", _) |
-           LessThanOrEqual("frame_id", _) => true
-      case _ => false
-    }
-    filters
-  }
-  override def pushedFilters(): Array[Filter] = pushed
-
-  override def pushLimit(l: Int): Boolean = { limit = l; false }
-
-  override def build(): Scan =
-    new DcdScan(paths, chunks, unitScale, required, frameLo, frameHi, limit,
-      mode)
-}
-
-/** startFrame/endFrame are LOCAL to the file; `filePath` (when
-  * non-null) overrides the scan path (directory-of-shards mode) and
-  * `frameOffset` is the global frame id of the file's frame 0. */
-case class DcdFrameRange(startFrame: Long, endFrame: Long,
-    filePath: String = null, frameOffset: Long = 0L) extends InputPartition
-
-class DcdScan(paths: Seq[String], chunks: Int, unitScale: Double,
-    required: StructType, frameLo: Long, frameHi: Long, limit: Int,
-    mode: String)
-    extends Scan with Batch {
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
-
-  /** Streaming twin: the (single) path is a directory that `*.dcd`
-    * shard files appear in (see DcdMicroBatchStream). */
-  override def toMicroBatchStream(checkpointLocation: String)
-      : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    new DcdMicroBatchStream(
-      MultiPath.single("dcd", paths, "streaming read"),
-      chunks, unitScale, required, mode)
-
-  private def planFile(p: String, nAtoms: Int, nFrames: Long, off: Long,
-      rowBudget: Long): (Seq[InputPartition], Long) = {
-    var lo = math.max(off, frameLo)
-    var hi = math.min(off + nFrames, frameHi)
-    if (rowBudget != Long.MaxValue && nAtoms > 0) {
-      val needed = (rowBudget + nAtoms - 1) / nAtoms
-      hi = math.min(hi, lo + math.max(needed, 1L))
-    }
-    if (lo >= hi || nAtoms <= 0) return (Nil, 0L)
-    val parts = (lo until hi by chunks.toLong).map { start =>
-      DcdFrameRange(start - off, math.min(start + chunks, hi) - off,
-        p, off): InputPartition
-    }
-    (parts, (hi - lo) * nAtoms)
+  /** One ~200-byte header parse plans the whole file (far cheaper than
+    * the text sources' line counts); each partition is a pure frame
+    * range the reader converts to a byte offset. */
+  override def probe(p: String, maxFrames: Long): FileFrames = {
+    val h = DcdHeader.parse(p)
+    FileFrames.uniform(h.nFrames, h.nAtoms)(DcdFrameRange(_, _, p, _))
   }
 
-  /** One driver-side header parse per file plans every partition (a
-    * ~200-byte read — the binary format's probe is far cheaper than the
-    * text sources' line counts); each partition is a pure frame range
-    * that the reader converts to a byte offset. A directory plans its
-    * `*.dcd` shards in name order with globally contiguous frame ids
-    * (see XyzScan). */
-  override def planInputPartitions(): Array[InputPartition] = {
-    // files/directories/lists/globs → one ordered file list with
-    // globally contiguous frame ids (see XyzScan / MultiPath); the
-    // per-file probe is a ~200-byte header parse
-    val files = MultiPath.expandAll("dcd", paths, Seq(".dcd"))
-    val budget0 = if (limit >= 0) limit.toLong else Long.MaxValue
-    val out = scala.collection.mutable.ArrayBuffer.empty[InputPartition]
-    var off = 0L
-    var budget = budget0
-    files.foreach { p =>
-      if (budget > 0 && off < frameHi) {
-        val h = DcdHeader.parse(p)
-        val (parts, rows) = planFile(p, h.nAtoms, h.nFrames, off, budget)
-        out ++= parts
-        if (budget != Long.MaxValue) budget = math.max(0L, budget - rows)
-        off += h.nFrames
-      }
-    }
-    out.toArray
-  }
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    new DcdReaderFactory(paths.head, unitScale, required, mode)
-}
-
-class DcdReaderFactory(path: String, unitScale: Double,
-    required: StructType, mode: String)
-    extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition)
+  override def reader(p: InputPartition, required: StructType)
       : PartitionReader[InternalRow] =
-    new DcdPartitionReader(path, unitScale, required,
-      partition.asInstanceOf[DcdFrameRange], mode)
+    new DcdPartitionReader(opts.unitScale, required,
+      p.asInstanceOf[DcdFrameRange], opts.mode)
 }
+
+/** startFrame/endFrame are LOCAL to `filePath`; `frameOffset` is the
+  * global frame id of the file's frame 0. */
+case class DcdFrameRange(startFrame: Long, endFrame: Long,
+    filePath: String, frameOffset: Long) extends InputPartition
 
 /** Positioned binary read: seek to `dataStart + startFrame × frameBytes`
   * and read whole fixed-size frame records — the S3 positioned-read
@@ -350,15 +205,14 @@ class DcdReaderFactory(path: String, unitScale: Double,
   * validated; a torn or corrupt frame FAILFASTs with file/frame context
   * or, under DROPMALFORMED, drops that frame (all of its rows) and
   * warns — the ensure_type warn-and-continue analog. */
-class DcdPartitionReader(path: String, unitScale: Double,
-    required: StructType, range: DcdFrameRange, mode: String)
+class DcdPartitionReader(unitScale: Double, required: StructType,
+    range: DcdFrameRange, mode: String)
     extends PartitionReader[InternalRow] {
 
   private val dropMalformed = mode == ParseMode.DropMalformed
   private var dropped = 0L
 
-  // directory-of-shards partitions carry their own file path
-  private val file = if (range.filePath != null) range.filePath else path
+  private val file = range.filePath
   // header re-parse per task is one 200-byte read; it keeps the
   // InputPartition serializable-small and the reader self-contained
   private val header = DcdHeader.parse(file)

@@ -4,12 +4,9 @@ import java.nio.{ByteBuffer, ByteOrder}
 import java.util
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.sources.{DataSourceRegister, EqualTo, Filter, GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual}
+import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader}
+import org.apache.spark.sql.connector.write.{LogicalWriteInfo, WriteBuilder}
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 /** Desmond frame-set ("dtr") layout: a trajectory is a DIRECTORY of
   * fixed-layout binary files — a `metadata` header, a `timekeys` index
@@ -267,38 +264,13 @@ object DtrFormat {
   }
 }
 
-class DtrDataSource extends TableProvider with DataSourceRegister {
+class DtrDataSource extends FrameSource {
   override def shortName(): String = "dtr"
-
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    DtrTable.Schema
-
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: util.Map[String, String]): Table = {
-    val paths = MultiPath.rawPaths("dtr", properties)
-    val chunks = Option(properties.get("chunks")).map { v =>
-      try v.toInt catch {
-        case _: NumberFormatException => throw new IllegalArgumentException(
-          s"dtr option 'chunks' must be an integer, got '$v'")
-      }
-    }.getOrElse(10)
-    if (chunks <= 0) throw new IllegalArgumentException(
-      s"dtr option 'chunks' must be > 0, got $chunks")
-    val unitScale = Option(properties.get("unit_scale")).map { v =>
-      try v.toDouble catch {
-        case _: NumberFormatException => throw new IllegalArgumentException(
-          s"dtr option 'unit_scale' must be numeric, got '$v'")
-      }
-    }.getOrElse(0.1) // Å→nm, as dcd/pdb
-    if (schema != null) {
-      val want = DtrTable.Schema.fields.map(f => (f.name, f.dataType)).toSeq
-      val got = schema.fields.map(f => (f.name, f.dataType)).toSeq
-      if (got != want) throw new IllegalArgumentException(
-        "dtr source has a fixed schema " + DtrTable.Schema.simpleString +
-          "; the supplied read schema does not match")
-    }
-    new DtrTable(paths, chunks, unitScale)
-  }
+  override def schema: StructType = DtrTable.Schema
+  override def unitScale: Option[Double] = Some(0.1) // Å→nm, as dcd/pdb
+  override def modes: Seq[String] = Seq(ParseMode.FailFast)
+  override def codec(opts: FrameOptions,
+      props: util.Map[String, String]): FrameCodec = new DtrCodec(opts)
 }
 
 object DtrTable {
@@ -317,67 +289,41 @@ object DtrTable {
     StructField("box_gamma", FloatType, nullable = true)))
 }
 
-class DtrTable(paths: Seq[String], chunks: Int, unitScale: Double)
-    extends Table with SupportsRead
-    with org.apache.spark.sql.connector.catalog.SupportsWrite {
-  override def name(): String = s"dtr:${paths.mkString(",")}"
-  override def schema(): StructType = DtrTable.Schema
-  override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_READ,
-      TableCapability.BATCH_WRITE, TableCapability.TRUNCATE,
-      TableCapability.MICRO_BATCH_READ)
-  override def newScanBuilder(options: CaseInsensitiveStringMap)
-      : ScanBuilder = new DtrScanBuilder(paths, chunks, unitScale)
-  override def newWriteBuilder(
-      info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
-      : org.apache.spark.sql.connector.write.WriteBuilder =
-    new DtrWriteBuilder(MultiPath.single("dtr", paths, "write"),
-      unitScale, info)
-}
+/** The "files" of a dtr load are frame-set DIRECTORIES: a stk list or
+  * multi-path order assigns globally contiguous frame ids across them,
+  * and a streamed collection directory admits a frame set once its
+  * `timekeys` index exists (the write path publishes by atomic rename
+  * with timekeys inside; a foreign producer writes the index last). */
+class DtrCodec(opts: FrameOptions) extends FrameCodec(opts) {
+  override def exts: Seq[String] = Seq(".dtr")
 
-class DtrScanBuilder(paths: Seq[String], chunks: Int, unitScale: Double)
-    extends ScanBuilder with SupportsPushDownRequiredColumns
-    with SupportsPushDownFilters with SupportsPushDownLimit {
-  private var required: StructType = DtrTable.Schema
-  private var frameLo: Long = 0L
-  private var frameHi: Long = Long.MaxValue // exclusive
-  private var limit: Int = -1
-  private var pushed: Array[Filter] = Array.empty
+  override def files(raws: Seq[String]): Seq[String] =
+    raws.flatMap(DtrFormat.framesets)
 
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    required = requiredSchema
+  override def isShard(e: FsIO.Entry): Boolean =
+    !e.isFile && e.name.endsWith(".dtr") &&
+      FsIO.isFile(FsIO.child(e.path, "timekeys"))
 
-  /** frame_id predicates shrink the planned range (same contract as
-    * the other binary sources); all filters stay residual. */
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    filters.foreach {
-      case EqualTo("frame_id", v: Long) =>
-        frameLo = math.max(frameLo, v); frameHi = math.min(frameHi, v + 1)
-      case GreaterThan("frame_id", v: Long) =>
-        frameLo = math.max(frameLo, v + 1)
-      case GreaterThanOrEqual("frame_id", v: Long) =>
-        frameLo = math.max(frameLo, v)
-      case LessThan("frame_id", v: Long) =>
-        frameHi = math.min(frameHi, v)
-      case LessThanOrEqual("frame_id", v: Long) =>
-        frameHi = math.min(frameHi, v + 1)
-      case _ => ()
+  /** One ~16-byte metadata read + one index read per frame set. Each
+    * partition covers frames of ONE frame set and carries their times
+    * from the index, so the reader never re-reads timekeys. */
+  override def probe(dir: String, maxFrames: Long): FileFrames = {
+    val meta = DtrFormat.readMeta(dir)
+    val (fpf, times) = DtrFormat.readTimekeys(dir)
+    DtrFormat.validateSetSizes(dir, meta, fpf, times.length.toLong)
+    FileFrames.uniform(times.length.toLong, meta.nAtoms) { (s, e, off) =>
+      DtrFrameRange(dir, s, e, meta.nAtoms, meta.hasBox, fpf,
+        times.slice(s.toInt, e.toInt), off, times.length.toLong)
     }
-    pushed = filters.filter {
-      case EqualTo("frame_id", _) | GreaterThan("frame_id", _) |
-           GreaterThanOrEqual("frame_id", _) | LessThan("frame_id", _) |
-           LessThanOrEqual("frame_id", _) => true
-      case _ => false
-    }
-    filters
   }
-  override def pushedFilters(): Array[Filter] = pushed
 
-  override def pushLimit(l: Int): Boolean = { limit = l; false }
+  override def reader(p: InputPartition, required: StructType)
+      : PartitionReader[InternalRow] =
+    new DtrPartitionReader(opts.unitScale, required,
+      p.asInstanceOf[DtrFrameRange])
 
-  override def build(): Scan =
-    new DtrScan(paths, chunks, unitScale, required, frameLo, frameHi,
-      limit)
+  override def sink: Option[(String, LogicalWriteInfo) => WriteBuilder] =
+    Some(new DtrWriteBuilder(_, opts.unitScale, _))
 }
 
 /** One chunk of frames within ONE frameset. `times` carries the chunk's
@@ -387,76 +333,6 @@ case class DtrFrameRange(dir: String, startFrame: Long, endFrame: Long,
     nAtoms: Int, hasBox: Boolean, framesPerFile: Int,
     times: Array[Double], frameOffset: Long,
     setFrames: Long) extends InputPartition
-
-class DtrScan(paths: Seq[String], chunks: Int, unitScale: Double,
-    required: StructType, frameLo: Long, frameHi: Long, limit: Int)
-    extends Scan with Batch {
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
-
-  /** Streaming twin: the (single) path is a COLLECTION directory that
-    * completed framesets appear in (see DtrMicroBatchStream). */
-  override def toMicroBatchStream(checkpointLocation: String)
-      : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    new DtrMicroBatchStream(
-      MultiPath.single("dtr", paths, "streaming read"),
-      chunks, unitScale, required)
-
-  private def planSet(dir: String, fpf: Int, times: Array[Double],
-      meta: DtrFormat.Meta, off: Long, rowBudget: Long)
-      : (Seq[InputPartition], Long) = {
-    var lo = math.max(off, frameLo)
-    var hi = math.min(off + times.length, frameHi)
-    if (rowBudget != Long.MaxValue) {
-      val needed = (rowBudget + meta.nAtoms - 1) / meta.nAtoms
-      hi = math.min(hi, lo + math.max(needed, 1L))
-    }
-    if (lo >= hi) return (Nil, 0L)
-    val parts = (lo until hi by chunks.toLong).map { start =>
-      val end = math.min(start + chunks, hi)
-      DtrFrameRange(dir, start - off, end - off, meta.nAtoms,
-        meta.hasBox, fpf,
-        times.slice((start - off).toInt, (end - off).toInt), off,
-        times.length.toLong)
-        : InputPartition
-    }
-    (parts, (hi - lo) * meta.nAtoms)
-  }
-
-  override def planInputPartitions(): Array[InputPartition] = {
-    // one ~16-byte metadata read + one index read per frameset; the
-    // stk list / multi-path order assigns globally contiguous frame
-    // ids (same contract as the shard sources)
-    val sets = paths.flatMap(DtrFormat.framesets)
-    val budget0 = if (limit >= 0) limit.toLong else Long.MaxValue
-    val out = scala.collection.mutable.ArrayBuffer.empty[InputPartition]
-    var off = 0L
-    var budget = budget0
-    sets.foreach { dir =>
-      if (budget > 0 && off < frameHi) {
-        val meta = DtrFormat.readMeta(dir)
-        val (fpf, times) = DtrFormat.readTimekeys(dir)
-        DtrFormat.validateSetSizes(dir, meta, fpf, times.length.toLong)
-        val (parts, rows) = planSet(dir, fpf, times, meta, off, budget)
-        out ++= parts
-        if (budget != Long.MaxValue) budget = math.max(0L, budget - rows)
-        off += times.length
-      }
-    }
-    out.toArray
-  }
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    new DtrReaderFactory(unitScale, required)
-}
-
-class DtrReaderFactory(unitScale: Double, required: StructType)
-    extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition)
-      : PartitionReader[InternalRow] =
-    new DtrPartitionReader(unitScale, required,
-      partition.asInstanceOf[DtrFrameRange])
-}
 
 /** Pure-arithmetic positioned read: frame f lives in file
   * `frame(f / framesPerFile)` at offset `(f % framesPerFile) ×

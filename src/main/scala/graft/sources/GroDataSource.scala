@@ -3,12 +3,9 @@ package graft.sources
 import java.util
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.sources.DataSourceRegister
+import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader}
+import org.apache.spark.sql.connector.write.{LogicalWriteInfo, WriteBuilder}
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
 /** DataSourceV2 connector for the GROMACS `.gro` text format — the
@@ -39,33 +36,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * -segment glob, or a DIRECTORY of `*.gro`/`*.gro.gz`
   * shards (read in name order, globally contiguous frame ids).
   */
-class GroDataSource extends TableProvider with DataSourceRegister {
+class GroDataSource extends FrameSource {
   override def shortName(): String = "gro"
-
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    GroTable.Schema
-
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: util.Map[String, String]): Table = {
-    val paths = MultiPath.rawPaths("gro", properties)
-    val chunks = Option(properties.get("chunks")).map { v =>
-      try v.toInt catch {
-        case _: NumberFormatException => throw new IllegalArgumentException(
-          s"gro option 'chunks' must be an integer, got '$v'")
-      }
-    }.getOrElse(10)
-    if (chunks <= 0) throw new IllegalArgumentException(
-      s"gro option 'chunks' must be > 0, got $chunks")
-    val mode = ParseMode.fromOptions("gro", properties)
-    if (schema != null) {
-      val want = GroTable.Schema.fields.map(f => (f.name, f.dataType)).toSeq
-      val got = schema.fields.map(f => (f.name, f.dataType)).toSeq
-      if (got != want) throw new IllegalArgumentException(
-        "gro source has a fixed schema " + GroTable.Schema.simpleString +
-          "; the supplied read schema does not match")
-    }
-    new GroTable(paths, chunks, mode)
-  }
+  override def schema: StructType = GroTable.Schema
+  // .gro coordinates are nm: no unit scale
+  override def unitScale: Option[Double] = None
+  override def codec(opts: FrameOptions,
+      props: util.Map[String, String]): FrameCodec = new GroCodec(opts)
 }
 
 object GroTable {
@@ -92,162 +69,53 @@ object GroTable {
     StructField("bv3z", FloatType, nullable = true)))
 }
 
-class GroTable(paths: Seq[String], chunks: Int,
-    mode: String = ParseMode.FailFast) extends Table with SupportsRead
-    with org.apache.spark.sql.connector.catalog.SupportsWrite {
-  override def name(): String = s"gro:${paths.mkString(",")}"
-  override def schema(): StructType = GroTable.Schema
-  // batch reads take files/directories/lists/globs; streaming reads and
-  // writes take a SINGLE directory of immutable shard files — same
-  // contract as the xyz source
-  override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.BATCH_WRITE,
-      TableCapability.TRUNCATE, TableCapability.MICRO_BATCH_READ)
-  override def newScanBuilder(options: CaseInsensitiveStringMap)
-      : ScanBuilder = new GroScanBuilder(paths, chunks, mode)
-  override def newWriteBuilder(
-      info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
-      : org.apache.spark.sql.connector.write.WriteBuilder =
-    new GroWriteBuilder(MultiPath.single("gro", paths, "write"), info)
-}
+class GroCodec(opts: FrameOptions) extends FrameCodec(opts) {
+  override def exts: Seq[String] = Seq(".gro", ".gro.gz")
 
-class GroScanBuilder(paths: Seq[String], chunks: Int,
-    mode: String = ParseMode.FailFast)
-    extends ScanBuilder with SupportsPushDownRequiredColumns
-    with org.apache.spark.sql.connector.read.SupportsPushDownFilters {
-  private var required: StructType = GroTable.Schema
-  private var frameLo: Long = 0L
-  private var frameHi: Long = Long.MaxValue // exclusive
-  private var pushed: Array[org.apache.spark.sql.sources.Filter] =
-    Array.empty
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    required = requiredSchema
-
-  /** frame_id predicates shrink the planned range (chunk pruning at
-    * plan time — same contract as XyzScanBuilder); all filters are
-    * returned as residuals so Spark still applies them exactly. */
-  override def pushFilters(
-      filters: Array[org.apache.spark.sql.sources.Filter])
-      : Array[org.apache.spark.sql.sources.Filter] = {
-    import org.apache.spark.sql.sources._
-    filters.foreach {
-      case EqualTo("frame_id", v: Long) =>
-        frameLo = math.max(frameLo, v); frameHi = math.min(frameHi, v + 1)
-      case GreaterThan("frame_id", v: Long) =>
-        frameLo = math.max(frameLo, v + 1)
-      case GreaterThanOrEqual("frame_id", v: Long) =>
-        frameLo = math.max(frameLo, v)
-      case LessThan("frame_id", v: Long) =>
-        frameHi = math.min(frameHi, v)
-      case LessThanOrEqual("frame_id", v: Long) =>
-        frameHi = math.min(frameHi, v + 1)
-      case _ => ()
-    }
-    pushed = filters.filter {
-      case EqualTo("frame_id", _) | GreaterThan("frame_id", _) |
-           GreaterThanOrEqual("frame_id", _) | LessThan("frame_id", _) |
-           LessThanOrEqual("frame_id", _) => true
-      case _ => false
-    }
-    filters
-  }
-  override def pushedFilters(): Array[org.apache.spark.sql.sources.Filter] =
-    pushed
-
-  override def build(): Scan =
-    new GroScan(paths, chunks, required, mode, frameLo, frameHi)
-}
-
-/** startFrame/endFrame are LOCAL to the file; `filePath` (when
-  * non-null) overrides the scan path (directory-of-shards mode) and
-  * `frameOffset` is the global frame id of the file's frame 0. */
-case class GroFrameRange(startFrame: Long, endFrame: Long, nAtoms: Int,
-    filePath: String = null, frameOffset: Long = 0L)
-    extends InputPartition
-
-class GroScan(paths: Seq[String], chunks: Int, required: StructType,
-    mode: String = ParseMode.FailFast, frameLo: Long = 0L,
-    frameHi: Long = Long.MaxValue)
-    extends Scan with Batch {
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
-
-  /** Streaming twin over a (single) directory of shard files (same
-    * shape as XyzMicroBatchStream). */
-  override def toMicroBatchStream(checkpointLocation: String)
-      : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    new GroMicroBatchStream(
-      MultiPath.single("gro", paths, "streaming read"), chunks, required)
-
-  /** Driver-side length probe → one InputPartition per `chunks` frames
-    * (core/dask_traj.py:87-90 analog, same shape as XyzScan). */
-  private def probe(p: String): (Int, Long) = {
+  /** Driver-side length probe: title + natoms line, then a line count
+    * (core/dask_traj.py:87-90 analog, same shape as the xyz probe). */
+  override def probe(p: String, maxFrames: Long): FileFrames = {
     val src = XyzLines.open(p)
-    try {
+    val (nAtoms, nFrames) = try {
       val it = src.getLines()
-      if (!it.hasNext) return (0, 0L)
-      it.next() // title
-      if (!it.hasNext) return (0, 0L)
-      val nAtoms = it.next().trim.toInt
-      if (nAtoms <= 0) throw new IllegalArgumentException(
-        s"gro file $p declares $nAtoms atoms")
-      var lines = 2L
-      while (it.hasNext) { it.next(); lines += 1 }
-      (nAtoms, lines / (nAtoms + 3))
-    } finally src.close()
-  }
-
-  private def planFile(p: String, nAtoms: Int, nFrames: Long,
-      off: Long): Seq[InputPartition] = {
-    val lo = math.max(off, frameLo)
-    val hi = math.min(off + nFrames, frameHi)
-    if (lo >= hi || nAtoms <= 0) return Nil
-    (lo until hi by chunks.toLong).map { start =>
-      GroFrameRange(start - off, math.min(start + chunks, hi) - off,
-        nAtoms, p, off): InputPartition
-    }
-  }
-
-  override def planInputPartitions(): Array[InputPartition] = {
-    // files/directories/lists/globs → one ordered file list with
-    // globally contiguous frame ids (see XyzScan / MultiPath)
-    val files = MultiPath.expandAll("gro", paths, Seq(".gro", ".gro.gz"))
-    val out = scala.collection.mutable.ArrayBuffer.empty[InputPartition]
-    var off = 0L
-    files.foreach { p =>
-      if (off < frameHi) {
-        val (nAtoms, nFrames) = probe(p)
-        out ++= planFile(p, nAtoms, nFrames, off)
-        off += nFrames
+      if (!it.hasNext) (0, 0L)
+      else {
+        it.next() // title
+        if (!it.hasNext) (0, 0L)
+        else {
+          val nAtoms = it.next().trim.toInt
+          if (nAtoms <= 0) throw new IllegalArgumentException(
+            s"gro file $p declares $nAtoms atoms")
+          var lines = 2L
+          while (it.hasNext) { it.next(); lines += 1 }
+          (nAtoms, lines / (nAtoms + 3))
+        }
       }
-    }
-    out.toArray
+    } finally src.close()
+    FileFrames.uniform(nFrames, nAtoms)(GroFrameRange(_, _, nAtoms, p, _))
   }
 
-  override def supportedCustomMetrics()
-      : Array[org.apache.spark.sql.connector.metric.CustomMetric] =
-    ParseMode.scanMetrics
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    new GroReaderFactory(paths.head, required, mode)
-}
-
-class GroReaderFactory(path: String, required: StructType,
-    mode: String = ParseMode.FailFast)
-    extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition)
+  override def reader(p: InputPartition, required: StructType)
       : PartitionReader[InternalRow] =
-    new GroPartitionReader(path, required,
-      partition.asInstanceOf[GroFrameRange], mode)
+    new GroPartitionReader(required, p.asInstanceOf[GroFrameRange],
+      opts.mode)
+
+  override def sink: Option[(String, LogicalWriteInfo) => WriteBuilder] =
+    Some(new GroWriteBuilder(_, _))
 }
+
+/** startFrame/endFrame are LOCAL to `filePath`; `frameOffset` is the
+  * global frame id of the file's frame 0. */
+case class GroFrameRange(startFrame: Long, endFrame: Long, nAtoms: Int,
+    filePath: String, frameOffset: Long) extends InputPartition
 
 /** Positioned chunk read: skip whole frames before the range, then
   * slurp one frame at a time (atom lines + the trailing box line) into
   * a bounded buffer — the box is only known at frame end, and every row
   * of the frame carries it. Buffer bound = natoms, the same per-chunk
   * bound the reference's read_chunk has (core/dask_traj.py:329-361). */
-class GroPartitionReader(path: String, required: StructType,
-    range: GroFrameRange, mode: String = ParseMode.FailFast)
+class GroPartitionReader(required: StructType, range: GroFrameRange,
+    mode: String)
     extends PartitionReader[InternalRow] {
 
   private val dropMalformed = mode == ParseMode.DropMalformed
@@ -255,8 +123,7 @@ class GroPartitionReader(path: String, required: StructType,
   private var dropped = 0L
   private var coerced = 0L
 
-  // directory-of-shards partitions carry their own file path
-  private val file = if (range.filePath != null) range.filePath else path
+  private val file = range.filePath
   private val src = XyzLines.open(file)
   private val lines = src.getLines()
   private val frameLines = range.nAtoms + 3

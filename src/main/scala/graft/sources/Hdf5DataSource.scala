@@ -3,12 +3,8 @@ package graft.sources
 import java.util
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.sources.{EqualTo, Filter, GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual, DataSourceRegister}
+import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader}
 import org.apache.spark.sql.types.StructType
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 /** The trajectory-convention view over one parsed HDF5 file. Two
   * public conventions resolve here:
@@ -83,177 +79,45 @@ private[sources] object H5Profile {
   *
   * Usage: `spark.read.format("hdf5").option("chunks", 100)
   * .load(path)`. */
-class Hdf5DataSource extends TableProvider with DataSourceRegister {
+class Hdf5DataSource extends FrameSource {
   override def shortName(): String = "hdf5"
+  override def schema: StructType = NetcdfTable.Schema
+  override def unitScale: Option[Double] = Some(1.0) // convention units (nm)
+  override def modes: Seq[String] = Seq(ParseMode.FailFast)
+  override def codec(opts: FrameOptions,
+      props: util.Map[String, String]): FrameCodec =
+    new Hdf5Codec(opts, topAtoms(props))
+}
 
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    NetcdfTable.Schema
+/** `expectAtoms` is the `top=` topology's atom count (-1: no `top`). */
+class Hdf5Codec(opts: FrameOptions, expectAtoms: Int)
+    extends FrameCodec(opts) {
+  override def exts: Seq[String] = Seq(".h5", ".hdf5", ".lh5")
 
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: util.Map[String, String]): Table = {
-    val paths = MultiPath.rawPaths("hdf5", properties)
-    val chunks = Option(properties.get("chunks")).map { v =>
-      try v.toInt catch {
-        case _: NumberFormatException => throw new IllegalArgumentException(
-          s"hdf5 option 'chunks' must be an integer, got '$v'")
-      }
-    }.getOrElse(10)
-    if (chunks <= 0) throw new IllegalArgumentException(
-      s"hdf5 option 'chunks' must be > 0, got $chunks")
-    val unitScale = Option(properties.get("unit_scale")).map { v =>
-      try v.toDouble catch {
-        case _: NumberFormatException => throw new IllegalArgumentException(
-          s"hdf5 option 'unit_scale' must be numeric, got '$v'")
-      }
-    }.getOrElse(1.0) // native convention units (nm)
-    if (schema != null) {
-      val want = NetcdfTable.Schema.fields.map(f => (f.name, f.dataType))
-        .toSeq
-      val got = schema.fields.map(f => (f.name, f.dataType)).toSeq
-      if (got != want) throw new IllegalArgumentException(
-        "hdf5 source has a fixed schema " +
-          NetcdfTable.Schema.simpleString +
-          "; the supplied read schema does not match")
-    }
-    val expectAtoms = Option(properties.get("top"))
-      .map(PdbTopology.atomCount).getOrElse(-1)
-    new Hdf5Table(paths, chunks, unitScale, expectAtoms)
+  /** The `top` cross-check runs for EVERY expanded file — including
+    * files the limit/frame range skips — so a mismatched trailing shard
+    * fails at plan time instead of passing silently until a later
+    * unrestricted read (ADVICE r13 #3). */
+  override def checkFiles(files: Seq[String]): Unit =
+    checkTop(files, expectAtoms)(H5Profile.parse(_).nAtoms)
+
+  /** One metadata parse per file gives (natoms, frames) — O(header)
+    * planning, the netcdf/DCD shape. */
+  override def probe(p: String, maxFrames: Long): FileFrames = {
+    val prof = H5Profile.parse(p)
+    FileFrames.uniform(prof.frames, prof.nAtoms)(Hdf5FrameRange(_, _, p, _))
   }
-}
 
-object Hdf5Table {
-  val Extensions = Seq(".h5", ".hdf5", ".lh5")
-}
-
-class Hdf5Table(paths: Seq[String], chunks: Int, unitScale: Double,
-    expectAtoms: Int = -1)
-    extends Table with SupportsRead {
-  override def name(): String = s"hdf5:${paths.mkString(",")}"
-  override def schema(): StructType = NetcdfTable.Schema
-  override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_READ,
-      TableCapability.MICRO_BATCH_READ)
-  override def newScanBuilder(options: CaseInsensitiveStringMap)
-      : ScanBuilder =
-    new Hdf5ScanBuilder(paths, chunks, unitScale, expectAtoms)
-}
-
-class Hdf5ScanBuilder(paths: Seq[String], chunks: Int,
-    unitScale: Double, expectAtoms: Int)
-    extends ScanBuilder with SupportsPushDownRequiredColumns
-    with SupportsPushDownFilters with SupportsPushDownLimit {
-  private var required: StructType = NetcdfTable.Schema
-  private var frameLo: Long = 0L
-  private var frameHi: Long = Long.MaxValue // exclusive
-  private var limit: Int = -1
-  private var pushed: Array[Filter] = Array.empty
-
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    required = requiredSchema
-
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    filters.foreach {
-      case EqualTo("frame_id", v: Long) =>
-        frameLo = math.max(frameLo, v); frameHi = math.min(frameHi, v + 1)
-      case GreaterThan("frame_id", v: Long) =>
-        frameLo = math.max(frameLo, v + 1)
-      case GreaterThanOrEqual("frame_id", v: Long) =>
-        frameLo = math.max(frameLo, v)
-      case LessThan("frame_id", v: Long) =>
-        frameHi = math.min(frameHi, v)
-      case LessThanOrEqual("frame_id", v: Long) =>
-        frameHi = math.min(frameHi, v + 1)
-      case _ => ()
-    }
-    pushed = filters.filter {
-      case EqualTo("frame_id", _) | GreaterThan("frame_id", _) |
-           GreaterThanOrEqual("frame_id", _) | LessThan("frame_id", _) |
-           LessThanOrEqual("frame_id", _) => true
-      case _ => false
-    }
-    filters
-  }
-  override def pushedFilters(): Array[Filter] = pushed
-
-  override def pushLimit(l: Int): Boolean = { limit = l; false }
-
-  override def build(): Scan =
-    new Hdf5Scan(paths, chunks, unitScale, required, frameLo, frameHi,
-      limit, expectAtoms)
+  override def reader(p: InputPartition, required: StructType)
+      : PartitionReader[InternalRow] =
+    new Hdf5PartitionReader(opts.unitScale, required,
+      p.asInstanceOf[Hdf5FrameRange])
 }
 
 /** startFrame/endFrame are LOCAL to `filePath`; `frameOffset` is the
   * global frame id of the file's frame 0. */
 case class Hdf5FrameRange(startFrame: Long, endFrame: Long,
     filePath: String, frameOffset: Long) extends InputPartition
-
-class Hdf5Scan(paths: Seq[String], chunks: Int, unitScale: Double,
-    required: StructType, frameLo: Long, frameHi: Long, limit: Int,
-    expectAtoms: Int)
-    extends Scan with Batch {
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
-
-  override def toMicroBatchStream(checkpointLocation: String)
-      : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    new Hdf5MicroBatchStream(
-      MultiPath.single("hdf5", paths, "streaming read"),
-      chunks, unitScale, required)
-
-  /** One metadata parse per file gives (natoms, frames) — O(header)
-    * planning per shard, the netcdf/DCD shape. */
-  override def planInputPartitions(): Array[InputPartition] = {
-    val files = MultiPath.expandAll("hdf5", paths, Hdf5Table.Extensions)
-    val budget0 = if (limit >= 0) limit.toLong else Long.MaxValue
-    val out = scala.collection.mutable.ArrayBuffer.empty[InputPartition]
-    var off = 0L
-    var budget = budget0
-    files.foreach { p =>
-      // single metadata parse per file (O(header)); the 'top'
-      // atom-count cross-check rides the same profile instead of a
-      // second pass, and it runs for EVERY expanded file — including
-      // files the limit/frameLo/frameHi restriction skips — so a
-      // mismatched trailing shard still fails fast at plan time
-      // instead of passing silently until a later unrestricted read
-      // (ADVICE r13 #3)
-      val prof = H5Profile.parse(p)
-      if (expectAtoms > 0 && prof.nAtoms != expectAtoms)
-        throw new IllegalArgumentException(
-          s"hdf5 $p: file declares ${prof.nAtoms} atoms but the " +
-            s"topology declares atom count $expectAtoms (option 'top')")
-      if (budget > 0 && off < frameHi) {
-        val lo = math.max(off, frameLo) - off
-        var hi = math.min(off + prof.frames, frameHi) - off
-        if (prof.nAtoms == 0) hi = lo
-        if (lo < hi && budget != Long.MaxValue) {
-          val maxFrames = (budget + prof.nAtoms - 1) / prof.nAtoms
-          hi = math.min(hi, lo + maxFrames)
-        }
-        if (lo < hi) {
-          (lo until hi by chunks.toLong).foreach { start =>
-            out += Hdf5FrameRange(start,
-              math.min(start + chunks, hi), p, off)
-          }
-          if (budget != Long.MaxValue)
-            budget = math.max(0L, budget - (hi - lo) * prof.nAtoms)
-        }
-        off += prof.frames
-      }
-    }
-    out.toArray
-  }
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    new Hdf5ReaderFactory(unitScale, required)
-}
-
-class Hdf5ReaderFactory(unitScale: Double, required: StructType)
-    extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition)
-      : PartitionReader[InternalRow] =
-    new Hdf5PartitionReader(unitScale, required,
-      partition.asInstanceOf[Hdf5FrameRange])
-}
 
 /** Per-partition read: time and cell columns (tiny) are slab-read once
   * for the whole frame range up front; coordinates stream frame by

@@ -3,12 +3,8 @@ package graft.sources
 import java.util
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.sources.{DataSourceRegister, EqualTo, Filter, GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual}
+import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader}
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 /** DataSourceV2 connector for the AMBER ASCII restart format
   * (`.inpcrd` / `.rst7` / `.restrt`, reference registry
@@ -40,48 +36,20 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * load(..., top=...) shape validation). Velocity blocks are parsed
   * past, not emitted — the reference's column registry for this
   * format carries coordinates only. */
-class InpcrdDataSource extends TableProvider with DataSourceRegister {
+class InpcrdDataSource extends FrameSource {
   override def shortName(): String = "inpcrd"
-
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    InpcrdTable.Schema
-
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: util.Map[String, String]): Table = {
-    val paths = MultiPath.rawPaths("inpcrd", properties)
-    val chunks = Option(properties.get("chunks")).map { v =>
-      try v.toInt catch {
-        case _: NumberFormatException => throw new IllegalArgumentException(
-          s"inpcrd option 'chunks' must be an integer, got '$v'")
-      }
-    }.getOrElse(10)
-    if (chunks <= 0) throw new IllegalArgumentException(
-      s"inpcrd option 'chunks' must be > 0, got $chunks")
-    val unitScale = Option(properties.get("unit_scale")).map { v =>
-      try v.toDouble catch {
-        case _: NumberFormatException => throw new IllegalArgumentException(
-          s"inpcrd option 'unit_scale' must be numeric, got '$v'")
-      }
-    }.getOrElse(0.1)
-    val vel = Option(properties.get("velocities")).map(_.toLowerCase)
+  override def schema: StructType = InpcrdTable.Schema
+  override def unitScale: Option[Double] = Some(0.1)
+  override def modes: Seq[String] = Seq(ParseMode.FailFast)
+  override def codec(opts: FrameOptions,
+      props: util.Map[String, String]): FrameCodec = {
+    val vel = Option(props.get("velocities")).map(_.toLowerCase)
       .getOrElse("auto")
     if (!Seq("auto", "true", "false").contains(vel))
       throw new IllegalArgumentException(
         s"inpcrd option 'velocities' must be auto, true or false, got " +
           s"'$vel'")
-    if (schema != null) {
-      val want =
-        InpcrdTable.Schema.fields.map(f => (f.name, f.dataType)).toSeq
-      val got = schema.fields.map(f => (f.name, f.dataType)).toSeq
-      if (got != want) throw new IllegalArgumentException(
-        "inpcrd source has a fixed schema " +
-          InpcrdTable.Schema.simpleString +
-          "; the supplied read schema " + schema.simpleString +
-          " does not match (drop .schema(...) or make it identical)")
-    }
-    val expectAtoms = Option(properties.get("top"))
-      .map(PdbTopology.atomCount).getOrElse(-1)
-    new InpcrdTable(paths, chunks, unitScale, vel, expectAtoms)
+    new InpcrdCodec(opts, vel, topAtoms(props))
   }
 }
 
@@ -105,114 +73,34 @@ object InpcrdTable {
       ".restrt.gz")
 }
 
-class InpcrdTable(paths: Seq[String], chunks: Int, unitScale: Double,
-    vel: String, expectAtoms: Int = -1) extends Table with SupportsRead {
-  override def name(): String = s"inpcrd:${paths.mkString(",")}"
-  override def schema(): StructType = InpcrdTable.Schema
-  override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_READ,
-      TableCapability.MICRO_BATCH_READ)
-  override def newScanBuilder(options: CaseInsensitiveStringMap)
-      : ScanBuilder =
-    new InpcrdScanBuilder(paths, chunks, unitScale, vel, expectAtoms)
-}
+class InpcrdCodec(opts: FrameOptions, vel: String, expectAtoms: Int)
+    extends FrameCodec(opts) {
+  override def exts: Seq[String] = InpcrdTable.Extensions
 
-class InpcrdScanBuilder(paths: Seq[String], chunks: Int, unitScale: Double,
-    vel: String, expectAtoms: Int = -1) extends ScanBuilder
-    with SupportsPushDownRequiredColumns with SupportsPushDownFilters
-    with SupportsPushDownLimit {
-  private var required: StructType = InpcrdTable.Schema
-  private var frameLo: Long = 0L
-  private var frameHi: Long = Long.MaxValue
-  private var limit: Int = -1
-  private var pushed: Array[Filter] = Array.empty
+  /** One frame per file: planning needs NO file probe at all — the
+    * frame axis IS the file list, so frame_id pushdown prunes files
+    * before any I/O. A frame holds at least one row, which is all a
+    * pushed limit may assume. */
+  override def probe(p: String, maxFrames: Long): FileFrames =
+    FileFrames.uniform(1L, 1)((s, _, off) => InpcrdFileRange(Seq(p), off + s))
 
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    required = requiredSchema
+  /** `chunks` counts FILES per partition (the per-frame analog of the
+    * other sources' frames per partition): runs of consecutive files. */
+  override def cut(windows: Seq[FrameWindow], chunks: Int)
+      : Seq[InputPartition] =
+    windows.filter(w => w.start < w.end).grouped(chunks).map { g =>
+      InpcrdFileRange(g.map(_.path), g.head.offset + g.head.start)
+    }.toSeq
 
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    filters.foreach {
-      case EqualTo("frame_id", v: Long) =>
-        frameLo = math.max(frameLo, v); frameHi = math.min(frameHi, v + 1)
-      case GreaterThan("frame_id", v: Long) =>
-        frameLo = math.max(frameLo, v + 1)
-      case GreaterThanOrEqual("frame_id", v: Long) =>
-        frameLo = math.max(frameLo, v)
-      case LessThan("frame_id", v: Long) =>
-        frameHi = math.min(frameHi, v)
-      case LessThanOrEqual("frame_id", v: Long) =>
-        frameHi = math.min(frameHi, v + 1)
-      case _ => ()
-    }
-    pushed = filters.filter {
-      case EqualTo("frame_id", _) | GreaterThan("frame_id", _) |
-           GreaterThanOrEqual("frame_id", _) | LessThan("frame_id", _) |
-           LessThanOrEqual("frame_id", _) => true
-      case _ => false
-    }
-    filters
-  }
-  override def pushedFilters(): Array[Filter] = pushed
-
-  override def pushLimit(l: Int): Boolean = { limit = l; false }
-
-  override def build(): Scan =
-    new InpcrdScan(paths, chunks, unitScale, vel, required, frameLo,
-      frameHi, limit, expectAtoms)
+  override def reader(p: InputPartition, required: StructType)
+      : PartitionReader[InternalRow] =
+    new InpcrdPartitionReader(opts.unitScale, vel, required,
+      p.asInstanceOf[InpcrdFileRange], expectAtoms)
 }
 
 /** A run of consecutive shard FILES; each file is one frame. */
 case class InpcrdFileRange(files: Seq[String], firstFrame: Long)
     extends InputPartition
-
-class InpcrdScan(paths: Seq[String], chunks: Int, unitScale: Double,
-    vel: String, required: StructType, frameLo: Long, frameHi: Long,
-    limit: Int, expectAtoms: Int = -1) extends Scan with Batch {
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
-
-  /** Streaming twin: the (single) path is a directory that restart
-    * files appear in (see InpcrdMicroBatchStream). */
-  override def toMicroBatchStream(checkpointLocation: String)
-      : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    new InpcrdMicroBatchStream(
-      MultiPath.single("inpcrd", paths, "streaming read"),
-      chunks, unitScale, required, vel, expectAtoms)
-
-  /** One frame per file: planning needs NO file probe at all — the
-    * frame axis IS the shard list, so frame_id pushdown prunes files
-    * before any I/O (cheaper than every multi-frame source, which must
-    * at least line-count each shard). */
-  override def planInputPartitions(): Array[InputPartition] = {
-    // files/directories/lists/globs -> one ordered file list; the
-    // frame axis IS the file list (see MultiPath)
-    val files: Seq[String] =
-      MultiPath.expandAll("inpcrd", paths, InpcrdTable.Extensions)
-    var lo = math.max(0L, frameLo)
-    var hi = math.min(files.length.toLong, frameHi)
-    if (limit >= 0) hi = math.min(hi, lo + math.max(limit, 1))
-    if (lo >= hi) return Array.empty
-    files.slice(lo.toInt, hi.toInt)
-      .grouped(chunks)
-      .zipWithIndex
-      .map { case (group, gi) =>
-        InpcrdFileRange(group, lo + gi.toLong * chunks): InputPartition
-      }
-      .toArray
-  }
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    new InpcrdReaderFactory(unitScale, vel, required, expectAtoms)
-}
-
-class InpcrdReaderFactory(unitScale: Double, vel: String,
-    required: StructType, expectAtoms: Int = -1)
-    extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition)
-      : PartitionReader[InternalRow] =
-    new InpcrdPartitionReader(unitScale, vel,
-      required, partition.asInstanceOf[InpcrdFileRange], expectAtoms)
-}
 
 class InpcrdPartitionReader(unitScale: Double, vel: String,
     required: StructType, range: InpcrdFileRange, expectAtoms: Int = -1)

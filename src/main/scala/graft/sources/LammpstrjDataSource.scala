@@ -3,12 +3,9 @@ package graft.sources
 import java.util
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.sources.{DataSourceRegister, EqualTo, Filter, GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual}
+import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader}
+import org.apache.spark.sql.connector.write.{LogicalWriteInfo, WriteBuilder}
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
 /** DataSourceV2 connector for the LAMMPS dump text format
@@ -49,44 +46,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * or a directory of `*.lammpstrj[.gz]` shards read in name order with
   * globally contiguous frame ids.
   */
-class LammpstrjDataSource extends TableProvider with DataSourceRegister {
+class LammpstrjDataSource extends FrameSource {
   override def shortName(): String = "lammpstrj"
-
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    LammpstrjTable.Schema
-
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: util.Map[String, String]): Table = {
-    val paths = MultiPath.rawPaths("lammpstrj", properties)
-    def intOpt(key: String, default: Int): Int =
-      Option(properties.get(key)).map { v =>
-        try v.toInt catch {
-          case _: NumberFormatException => throw new IllegalArgumentException(
-            s"lammpstrj option '$key' must be an integer, got '$v'")
-        }
-      }.getOrElse(default)
-    val chunks = intOpt("chunks", 10)
-    if (chunks <= 0) throw new IllegalArgumentException(
-      s"lammpstrj option 'chunks' must be > 0, got $chunks")
-    val unitScale = Option(properties.get("unit_scale")).map { v =>
-      try v.toDouble catch {
-        case _: NumberFormatException => throw new IllegalArgumentException(
-          s"lammpstrj option 'unit_scale' must be numeric, got '$v'")
-      }
-    }.getOrElse(1.0)
-    val mode = ParseMode.fromOptions("lammpstrj", properties)
-    if (schema != null) {
-      val want =
-        LammpstrjTable.Schema.fields.map(f => (f.name, f.dataType)).toSeq
-      val got = schema.fields.map(f => (f.name, f.dataType)).toSeq
-      if (got != want) throw new IllegalArgumentException(
-        "lammpstrj source has a fixed schema " +
-          LammpstrjTable.Schema.simpleString +
-          "; the supplied read schema " + schema.simpleString +
-          " does not match (drop .schema(...) or make it identical)")
-    }
-    new LammpstrjTable(paths, chunks, unitScale, mode)
-  }
+  override def schema: StructType = LammpstrjTable.Schema
+  override def unitScale: Option[Double] = Some(1.0)
+  override def codec(opts: FrameOptions,
+      props: util.Map[String, String]): FrameCodec = new LammpstrjCodec(opts)
 }
 
 object LammpstrjTable {
@@ -132,177 +97,61 @@ object LammpstrjTable {
   }
 }
 
-class LammpstrjTable(paths: Seq[String], chunks: Int, unitScale: Double,
-    mode: String) extends Table with SupportsRead
-    with org.apache.spark.sql.connector.catalog.SupportsWrite {
-  override def name(): String = s"lammpstrj:${paths.mkString(",")}"
-  override def schema(): StructType = LammpstrjTable.Schema
-  override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.BATCH_WRITE,
-      TableCapability.TRUNCATE, TableCapability.MICRO_BATCH_READ)
-  override def newScanBuilder(options: CaseInsensitiveStringMap)
-      : ScanBuilder =
-    new LammpstrjScanBuilder(paths, chunks, unitScale, mode)
-  override def newWriteBuilder(
-      info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
-      : org.apache.spark.sql.connector.write.WriteBuilder =
-    new LammpstrjWriteBuilder(
-      MultiPath.single("lammpstrj", paths, "write"), unitScale, info)
-}
-
-class LammpstrjScanBuilder(paths: Seq[String], chunks: Int, unitScale: Double,
-    mode: String) extends ScanBuilder with SupportsPushDownRequiredColumns
-    with SupportsPushDownFilters with SupportsPushDownLimit {
-  private var required: StructType = LammpstrjTable.Schema
-  private var frameLo: Long = 0L
-  private var frameHi: Long = Long.MaxValue // exclusive
-  private var limit: Int = -1
-  private var pushed: Array[Filter] = Array.empty
-
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    required = requiredSchema
-
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    filters.foreach {
-      case EqualTo("frame_id", v: Long) =>
-        frameLo = math.max(frameLo, v); frameHi = math.min(frameHi, v + 1)
-      case GreaterThan("frame_id", v: Long) =>
-        frameLo = math.max(frameLo, v + 1)
-      case GreaterThanOrEqual("frame_id", v: Long) =>
-        frameLo = math.max(frameLo, v)
-      case LessThan("frame_id", v: Long) =>
-        frameHi = math.min(frameHi, v)
-      case LessThanOrEqual("frame_id", v: Long) =>
-        frameHi = math.min(frameHi, v + 1)
-      case _ => ()
-    }
-    pushed = filters.filter {
-      case EqualTo("frame_id", _) | GreaterThan("frame_id", _) |
-           GreaterThanOrEqual("frame_id", _) | LessThan("frame_id", _) |
-           LessThanOrEqual("frame_id", _) => true
-      case _ => false
-    }
-    filters
-  }
-  override def pushedFilters(): Array[Filter] = pushed
-
-  override def pushLimit(l: Int): Boolean = { limit = l; false }
-
-  override def build(): Scan =
-    new LammpstrjScan(paths, chunks, unitScale, required, frameLo, frameHi,
-      limit, mode)
-}
-
-case class LammpstrjFrameRange(startFrame: Long, endFrame: Long,
-    nAtoms: Int, layout: LammpstrjTable.AtomLayout,
-    filePath: String = null, frameOffset: Long = 0L)
-    extends InputPartition
-
-class LammpstrjScan(paths: Seq[String], chunks: Int, unitScale: Double,
-    required: StructType, frameLo: Long, frameHi: Long, limit: Int,
-    mode: String) extends Scan with Batch {
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
-
-  /** Streaming twin (see LammpstrjMicroBatchStream). */
-  override def toMicroBatchStream(checkpointLocation: String)
-      : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    new LammpstrjMicroBatchStream(
-      MultiPath.single("lammpstrj", paths, "streaming read"),
-      chunks, unitScale, required, mode)
-
-  /** Frame count of one file (streaming offset bookkeeping). */
-  private[sources] def planFrameCount(p: String): Long = probe(p)._2
+class LammpstrjCodec(opts: FrameOptions) extends FrameCodec(opts) {
+  override def exts: Seq[String] = Seq(".lammpstrj", ".lammpstrj.gz")
 
   /** Driver-side probe: first-frame header gives natoms + the ATOMS
     * column layout; a line count gives the frame count (9 header lines
     * + natoms data lines per frame). */
-  private def probe(p: String)
-      : (Int, Long, LammpstrjTable.AtomLayout) = {
+  override def probe(p: String, maxFrames: Long): FileFrames = {
     val src = XyzLines.open(p)
-    try {
+    val (nAtoms, nFrames, layout) = try {
       val it = src.getLines()
-      if (!it.hasNext) return (0, 0L, null)
-      def expect(prefix: String): String = {
-        if (!it.hasNext) throw new IllegalArgumentException(
-          s"lammpstrj $p: truncated header, expected '$prefix'")
-        val l = it.next()
-        if (!l.startsWith(prefix)) throw new IllegalArgumentException(
-          s"lammpstrj $p: expected '$prefix', got '${l.take(60)}'")
-        l
+      if (!it.hasNext) (0, 0L, null)
+      else {
+        def expect(prefix: String): String = {
+          if (!it.hasNext) throw new IllegalArgumentException(
+            s"lammpstrj $p: truncated header, expected '$prefix'")
+          val l = it.next()
+          if (!l.startsWith(prefix)) throw new IllegalArgumentException(
+            s"lammpstrj $p: expected '$prefix', got '${l.take(60)}'")
+          l
+        }
+        expect("ITEM: TIMESTEP"); it.next()
+        expect("ITEM: NUMBER OF ATOMS")
+        val nAtoms = it.next().trim.toInt
+        expect("ITEM: BOX BOUNDS"); it.next(); it.next(); it.next()
+        val layout =
+          LammpstrjTable.parseAtomsHeader(expect("ITEM: ATOMS"), p)
+        // 9 header lines already consumed; count the rest → total lines
+        var lines = 9L
+        while (it.hasNext) { it.next(); lines += 1 }
+        (nAtoms, lines / (nAtoms + 9), layout)
       }
-      expect("ITEM: TIMESTEP"); it.next()
-      expect("ITEM: NUMBER OF ATOMS")
-      val nAtoms = it.next().trim.toInt
-      expect("ITEM: BOX BOUNDS"); it.next(); it.next(); it.next()
-      val layout =
-        LammpstrjTable.parseAtomsHeader(expect("ITEM: ATOMS"), p)
-      // 9 header lines already consumed; count the rest → total lines
-      var lines = 9L
-      while (it.hasNext) { it.next(); lines += 1 }
-      (nAtoms, lines / (nAtoms + 9), layout)
     } finally src.close()
+    FileFrames.uniform(nFrames, nAtoms)(
+      LammpstrjFrameRange(_, _, nAtoms, layout, p, _))
   }
 
-  private def planFile(p: String, nAtoms: Int, nFrames: Long,
-      layout: LammpstrjTable.AtomLayout, off: Long, rowBudget: Long)
-      : (Seq[InputPartition], Long) = {
-    var lo = math.max(off, frameLo)
-    var hi = math.min(off + nFrames, frameHi)
-    if (rowBudget != Long.MaxValue && nAtoms > 0) {
-      val needed = (rowBudget + nAtoms - 1) / nAtoms
-      hi = math.min(hi, lo + math.max(needed, 1L))
-    }
-    if (lo >= hi || nAtoms <= 0) return (Nil, 0L)
-    val parts = (lo until hi by chunks.toLong).map { start =>
-      LammpstrjFrameRange(start - off, math.min(start + chunks, hi) - off,
-        nAtoms, layout, p, off): InputPartition
-    }
-    (parts, (hi - lo) * nAtoms)
-  }
-
-  override def planInputPartitions(): Array[InputPartition] = {
-    // files/directories/lists/globs -> one ordered file list with
-    // globally contiguous frame ids (see XyzScan / MultiPath)
-    val files = MultiPath.expandAll("lammpstrj", paths,
-      Seq(".lammpstrj", ".lammpstrj.gz"))
-    val budget0 = if (limit >= 0) limit.toLong else Long.MaxValue
-    val out = scala.collection.mutable.ArrayBuffer.empty[InputPartition]
-    var off = 0L
-    var budget = budget0
-    files.foreach { p =>
-      if (budget > 0 && off < frameHi) {
-        val (nAtoms, nFrames, layout) = probe(p)
-        val (parts, rows) =
-          planFile(p, nAtoms, nFrames, layout, off, budget)
-        out ++= parts
-        if (budget != Long.MaxValue) budget = math.max(0L, budget - rows)
-        off += nFrames
-      }
-    }
-    out.toArray
-  }
-
-  override def supportedCustomMetrics()
-      : Array[org.apache.spark.sql.connector.metric.CustomMetric] =
-    ParseMode.scanMetrics
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    new LammpstrjReaderFactory(paths.head, unitScale, required, mode)
-}
-
-class LammpstrjReaderFactory(path: String, unitScale: Double,
-    required: StructType, mode: String) extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition)
+  override def reader(p: InputPartition, required: StructType)
       : PartitionReader[InternalRow] =
-    new LammpstrjPartitionReader(path, unitScale, required,
-      partition.asInstanceOf[LammpstrjFrameRange], mode)
+    new LammpstrjPartitionReader(opts.unitScale, required,
+      p.asInstanceOf[LammpstrjFrameRange], opts.mode)
+
+  override def sink: Option[(String, LogicalWriteInfo) => WriteBuilder] =
+    Some(new LammpstrjWriteBuilder(_, opts.unitScale, _))
 }
+
+/** startFrame/endFrame are LOCAL to `filePath`; `frameOffset` is the
+  * global frame id of the file's frame 0. */
+case class LammpstrjFrameRange(startFrame: Long, endFrame: Long,
+    nAtoms: Int, layout: LammpstrjTable.AtomLayout, filePath: String,
+    frameOffset: Long) extends InputPartition
 
 /** Positioned chunk read: skip whole frames by line arithmetic, then
   * parse the 9-line header + natoms data lines per frame. */
-class LammpstrjPartitionReader(path: String, unitScale: Double,
-    required: StructType, range: LammpstrjFrameRange, mode: String)
+class LammpstrjPartitionReader(unitScale: Double, required: StructType,
+    range: LammpstrjFrameRange, mode: String)
     extends PartitionReader[InternalRow] {
 
   private val dropMalformed = mode == ParseMode.DropMalformed
@@ -310,7 +159,7 @@ class LammpstrjPartitionReader(path: String, unitScale: Double,
   private var dropped = 0L
   private var coerced = 0L
 
-  private val file = if (range.filePath != null) range.filePath else path
+  private val file = range.filePath
   private val src = XyzLines.open(file)
   private val lines = src.getLines()
   private val frameLines = range.nAtoms + 9

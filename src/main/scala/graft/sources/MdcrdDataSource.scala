@@ -3,12 +3,9 @@ package graft.sources
 import java.util
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.sources.{DataSourceRegister, EqualTo, Filter, GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual}
+import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader}
+import org.apache.spark.sql.connector.write.{LogicalWriteInfo, WriteBuilder}
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
 /** DataSourceV2 connector for the AMBER ASCII trajectory format
@@ -39,33 +36,24 @@ import org.apache.spark.unsafe.types.UTF8String
   * convention), `mode` (shared ParseMode contract). `path` may be a
   * file or a directory of `*.crd` / `*.mdcrd` (+`.gz`) shards.
   */
-class MdcrdDataSource extends TableProvider with DataSourceRegister {
+class MdcrdDataSource extends FrameSource {
   override def shortName(): String = "mdcrd"
+  override def schema: StructType = MdcrdTable.Schema
+  override def unitScale: Option[Double] = Some(0.1)
 
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    MdcrdTable.Schema
-
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: util.Map[String, String]): Table = {
-    val paths = MultiPath.rawPaths("mdcrd", properties)
-    def intOpt(key: String, default: Int): Int =
-      Option(properties.get(key)).map { v =>
-        try v.toInt catch {
-          case _: NumberFormatException => throw new IllegalArgumentException(
-            s"mdcrd option '$key' must be an integer, got '$v'")
-        }
-      }.getOrElse(default)
-    // the frame shape is NOT in the file: either `natoms` directly or
-    // `top` (a PDB topology, the reference's `load(..., top=...)` idiom
-    // — core/dask_traj.py:61,80-83) must supply it; both must agree.
-    // Required for SCANS (validated in newScanBuilder — the write path
-    // does not need the atom count).
-    val natoms = PdbTopology.resolveNatoms("mdcrd",
-      Option(properties.get("top")), intOpt("natoms", -1))
-    val chunks = intOpt("chunks", 10)
-    if (chunks <= 0) throw new IllegalArgumentException(
-      s"mdcrd option 'chunks' must be > 0, got $chunks")
-    val box = Option(properties.get("box")).map { v =>
+  /** The frame shape is NOT in the file: either `natoms` directly or
+    * `top` (a PDB topology, the reference's `load(..., top=...)` idiom —
+    * core/dask_traj.py:61,80-83) must supply it for a scan; both must
+    * agree. The write path needs neither. */
+  override def codec(opts: FrameOptions,
+      props: util.Map[String, String]): FrameCodec = {
+    val natoms = Option(props.get("natoms")).map { v =>
+      try v.toInt catch {
+        case _: NumberFormatException => throw new IllegalArgumentException(
+          s"mdcrd option 'natoms' must be an integer, got '$v'")
+      }
+    }.getOrElse(-1)
+    val box = Option(props.get("box")).map { v =>
       v.toLowerCase match {
         case "true" => true
         case "false" => false
@@ -73,22 +61,8 @@ class MdcrdDataSource extends TableProvider with DataSourceRegister {
           s"mdcrd option 'box' must be true or false, got '$other'")
       }
     }.getOrElse(false)
-    val unitScale = Option(properties.get("unit_scale")).map { v =>
-      try v.toDouble catch {
-        case _: NumberFormatException => throw new IllegalArgumentException(
-          s"mdcrd option 'unit_scale' must be numeric, got '$v'")
-      }
-    }.getOrElse(0.1)
-    val mode = ParseMode.fromOptions("mdcrd", properties)
-    if (schema != null) {
-      val want = MdcrdTable.Schema.fields.map(f => (f.name, f.dataType)).toSeq
-      val got = schema.fields.map(f => (f.name, f.dataType)).toSeq
-      if (got != want) throw new IllegalArgumentException(
-        "mdcrd source has a fixed schema " + MdcrdTable.Schema.simpleString +
-          "; the supplied read schema " + schema.simpleString +
-          " does not match (drop .schema(...) or make it identical)")
-    }
-    new MdcrdTable(paths, natoms, box, chunks, unitScale, mode)
+    new MdcrdCodec(opts, PdbTopology.resolveNatoms("mdcrd",
+      Option(props.get("top")), natoms), box)
   }
 }
 
@@ -112,174 +86,58 @@ object MdcrdTable {
     (3 * natoms + 9) / 10 + (if (box) 1 else 0)
 }
 
-class MdcrdTable(paths: Seq[String], natoms: Int, box: Boolean,
-    chunks: Int, unitScale: Double, mode: String)
-    extends Table with SupportsRead
-    with org.apache.spark.sql.connector.catalog.SupportsWrite {
-  override def name(): String = s"mdcrd:${paths.mkString(",")}"
-  override def schema(): StructType = MdcrdTable.Schema
-  override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.BATCH_WRITE,
-      TableCapability.TRUNCATE, TableCapability.MICRO_BATCH_READ)
-  override def newScanBuilder(options: CaseInsensitiveStringMap)
-      : ScanBuilder = {
+class MdcrdCodec(opts: FrameOptions, natoms: Int, box: Boolean)
+    extends FrameCodec(opts) {
+  override def exts: Seq[String] =
+    Seq(".crd", ".mdcrd", ".crd.gz", ".mdcrd.gz")
+
+  override def checkRead(): Unit =
     if (natoms <= 0) throw new IllegalArgumentException(
       "mdcrd needs the atom count: pass option 'natoms' (> 0) or " +
         "option 'top' (a PDB topology file) — the AMBER trajectory " +
         "format does not carry it (readers get it from the topology)")
-    new MdcrdScanBuilder(paths, natoms, box, chunks, unitScale, mode)
-  }
-  override def newWriteBuilder(
-      info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
-      : org.apache.spark.sql.connector.write.WriteBuilder =
-    new MdcrdWriteBuilder(MultiPath.single("mdcrd", paths, "write"), box, unitScale, info)
-}
-
-class MdcrdScanBuilder(paths: Seq[String], natoms: Int, box: Boolean,
-    chunks: Int, unitScale: Double, mode: String)
-    extends ScanBuilder with SupportsPushDownRequiredColumns
-    with SupportsPushDownFilters with SupportsPushDownLimit {
-  private var required: StructType = MdcrdTable.Schema
-  private var frameLo: Long = 0L
-  private var frameHi: Long = Long.MaxValue
-  private var limit: Int = -1
-  private var pushed: Array[Filter] = Array.empty
-
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    required = requiredSchema
-
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    filters.foreach {
-      case EqualTo("frame_id", v: Long) =>
-        frameLo = math.max(frameLo, v); frameHi = math.min(frameHi, v + 1)
-      case GreaterThan("frame_id", v: Long) =>
-        frameLo = math.max(frameLo, v + 1)
-      case GreaterThanOrEqual("frame_id", v: Long) =>
-        frameLo = math.max(frameLo, v)
-      case LessThan("frame_id", v: Long) =>
-        frameHi = math.min(frameHi, v)
-      case LessThanOrEqual("frame_id", v: Long) =>
-        frameHi = math.min(frameHi, v + 1)
-      case _ => ()
-    }
-    pushed = filters.filter {
-      case EqualTo("frame_id", _) | GreaterThan("frame_id", _) |
-           GreaterThanOrEqual("frame_id", _) | LessThan("frame_id", _) |
-           LessThanOrEqual("frame_id", _) => true
-      case _ => false
-    }
-    filters
-  }
-  override def pushedFilters(): Array[Filter] = pushed
-
-  override def pushLimit(l: Int): Boolean = { limit = l; false }
-
-  override def build(): Scan =
-    new MdcrdScan(paths, natoms, box, chunks, unitScale, required,
-      frameLo, frameHi, limit, mode)
-}
-
-case class MdcrdFrameRange(startFrame: Long, endFrame: Long,
-    filePath: String = null, frameOffset: Long = 0L)
-    extends InputPartition
-
-class MdcrdScan(paths: Seq[String], natoms: Int, box: Boolean, chunks: Int,
-    unitScale: Double, required: StructType, frameLo: Long,
-    frameHi: Long, limit: Int, mode: String) extends Scan with Batch {
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
-
-  /** Streaming twin (see MdcrdMicroBatchStream). */
-  override def toMicroBatchStream(checkpointLocation: String)
-      : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    new MdcrdMicroBatchStream(
-      MultiPath.single("mdcrd", paths, "streaming read"),
-      natoms, box, chunks, unitScale, required, mode)
-
-  /** Frame count of one file (streaming offset bookkeeping). */
-  private[sources] def planFrameCount(p: String): Long = probe(p)
 
   /** Driver-side probe: a line count (shape comes from the natoms
-    * option, not the file). */
-  private def probe(p: String): Long = {
+    * option, not the file; every file shares it — one topology). */
+  override def probe(p: String, maxFrames: Long): FileFrames = {
     val src = XyzLines.open(p)
-    try {
+    val nFrames = try {
       val it = src.getLines()
-      if (!it.hasNext) return 0L
-      it.next() // title
-      var lines = 0L
-      while (it.hasNext) { it.next(); lines += 1 }
-      lines / MdcrdTable.frameLines(natoms, box)
-    } finally src.close()
-  }
-
-  private def planFile(p: String, nFrames: Long, off: Long,
-      rowBudget: Long): (Seq[InputPartition], Long) = {
-    var lo = math.max(off, frameLo)
-    var hi = math.min(off + nFrames, frameHi)
-    if (rowBudget != Long.MaxValue) {
-      val needed = (rowBudget + natoms - 1) / natoms
-      hi = math.min(hi, lo + math.max(needed, 1L))
-    }
-    if (lo >= hi) return (Nil, 0L)
-    val parts = (lo until hi by chunks.toLong).map { start =>
-      MdcrdFrameRange(start - off, math.min(start + chunks, hi) - off,
-        p, off): InputPartition
-    }
-    (parts, (hi - lo) * natoms)
-  }
-
-  override def planInputPartitions(): Array[InputPartition] = {
-    // files/directories/lists/globs -> one ordered file list with
-    // globally contiguous frame ids (see XyzScan / MultiPath); every
-    // file shares the natoms/box shape options (one topology)
-    val files = MultiPath.expandAll("mdcrd", paths,
-      Seq(".crd", ".mdcrd", ".crd.gz", ".mdcrd.gz"))
-    val budget0 = if (limit >= 0) limit.toLong else Long.MaxValue
-    val out = scala.collection.mutable.ArrayBuffer.empty[InputPartition]
-    var off = 0L
-    var budget = budget0
-    files.foreach { p =>
-      if (budget > 0 && off < frameHi) {
-        val nFrames = probe(p)
-        val (parts, rows) = planFile(p, nFrames, off, budget)
-        out ++= parts
-        if (budget != Long.MaxValue) budget = math.max(0L, budget - rows)
-        off += nFrames
+      if (!it.hasNext) 0L
+      else {
+        it.next() // title
+        var lines = 0L
+        while (it.hasNext) { it.next(); lines += 1 }
+        lines / MdcrdTable.frameLines(natoms, box)
       }
-    }
-    out.toArray
+    } finally src.close()
+    FileFrames.uniform(nFrames, natoms)(MdcrdFrameRange(_, _, p, _))
   }
 
-  override def supportedCustomMetrics()
-      : Array[org.apache.spark.sql.connector.metric.CustomMetric] =
-    ParseMode.scanMetrics
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    new MdcrdReaderFactory(paths.head, natoms, box, unitScale, required,
-      mode)
-}
-
-class MdcrdReaderFactory(path: String, natoms: Int, box: Boolean,
-    unitScale: Double, required: StructType, mode: String)
-    extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition)
+  override def reader(p: InputPartition, required: StructType)
       : PartitionReader[InternalRow] =
-    new MdcrdPartitionReader(path, natoms, box, unitScale, required,
-      partition.asInstanceOf[MdcrdFrameRange], mode)
+    new MdcrdPartitionReader(natoms, box, opts.unitScale, required,
+      p.asInstanceOf[MdcrdFrameRange], opts.mode)
+
+  override def sink: Option[(String, LogicalWriteInfo) => WriteBuilder] =
+    Some(new MdcrdWriteBuilder(_, box, opts.unitScale, _))
 }
+
+/** startFrame/endFrame are LOCAL to `filePath`; `frameOffset` is the
+  * global frame id of the file's frame 0. */
+case class MdcrdFrameRange(startFrame: Long, endFrame: Long,
+    filePath: String, frameOffset: Long) extends InputPartition
 
 /** Positioned chunk read over fixed-width 8-char coordinate columns. */
-class MdcrdPartitionReader(path: String, natoms: Int, box: Boolean,
-    unitScale: Double, required: StructType, range: MdcrdFrameRange,
-    mode: String) extends PartitionReader[InternalRow] {
+class MdcrdPartitionReader(natoms: Int, box: Boolean, unitScale: Double,
+    required: StructType, range: MdcrdFrameRange, mode: String) extends PartitionReader[InternalRow] {
 
   private val coerceWarn = mode == ParseMode.CoerceWarn
   private val dropMalformed = mode == ParseMode.DropMalformed
   private var dropped = 0L
   private var coerced = 0L
 
-  private val file = if (range.filePath != null) range.filePath else path
+  private val file = range.filePath
   private val src = XyzLines.open(file)
   private val lines = src.getLines()
   private val frameLines = MdcrdTable.frameLines(natoms, box)

@@ -4,12 +4,8 @@ import java.nio.ByteBuffer
 import java.util
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.sources.{EqualTo, Filter, GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual, DataSourceRegister}
+import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader}
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 /** One variable of a parsed netCDF-classic header. `isRecord` means the
   * first dimension is the unlimited (record) dimension; `begin` is the
@@ -260,42 +256,15 @@ private[sources] object AmberProfile {
   *
   * Usage: `spark.read.format("netcdf").option("chunks", 100)
   * .load(path)`. */
-class NetcdfDataSource extends TableProvider with DataSourceRegister {
+class NetcdfDataSource extends FrameSource {
   override def shortName(): String = "netcdf"
-
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    NetcdfTable.Schema
-
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: util.Map[String, String]): Table = {
-    val paths = MultiPath.rawPaths("netcdf", properties)
-    val chunks = Option(properties.get("chunks")).map { v =>
-      try v.toInt catch {
-        case _: NumberFormatException => throw new IllegalArgumentException(
-          s"netcdf option 'chunks' must be an integer, got '$v'")
-      }
-    }.getOrElse(10)
-    if (chunks <= 0) throw new IllegalArgumentException(
-      s"netcdf option 'chunks' must be > 0, got $chunks")
-    val unitScale = Option(properties.get("unit_scale")).map { v =>
-      try v.toDouble catch {
-        case _: NumberFormatException => throw new IllegalArgumentException(
-          s"netcdf option 'unit_scale' must be numeric, got '$v'")
-      }
-    }.getOrElse(1.0) // file is already Å (AMBER native units)
-    if (schema != null) {
-      val want = NetcdfTable.Schema.fields.map(f => (f.name, f.dataType))
-        .toSeq
-      val got = schema.fields.map(f => (f.name, f.dataType)).toSeq
-      if (got != want) throw new IllegalArgumentException(
-        "netcdf source has a fixed schema " +
-          NetcdfTable.Schema.simpleString +
-          "; the supplied read schema does not match")
-    }
-    val expectAtoms = Option(properties.get("top"))
-      .map(PdbTopology.atomCount).getOrElse(-1)
-    new NetcdfTable(paths, chunks, unitScale, expectAtoms)
-  }
+  override def schema: StructType = NetcdfTable.Schema
+  // file is already Å (AMBER native units)
+  override def unitScale: Option[Double] = Some(1.0)
+  override def modes: Seq[String] = Seq(ParseMode.FailFast)
+  override def codec(opts: FrameOptions,
+      props: util.Map[String, String]): FrameCodec =
+    new NetcdfCodec(opts, topAtoms(props))
 }
 
 object NetcdfTable {
@@ -320,61 +289,31 @@ object NetcdfTable {
   val Extensions = Seq(".nc", ".ncdf", ".netcdf", ".ncrst")
 }
 
-class NetcdfTable(paths: Seq[String], chunks: Int, unitScale: Double,
-    expectAtoms: Int = -1)
-    extends Table with SupportsRead {
-  override def name(): String = s"netcdf:${paths.mkString(",")}"
-  override def schema(): StructType = NetcdfTable.Schema
-  override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_READ,
-      TableCapability.MICRO_BATCH_READ)
-  override def newScanBuilder(options: CaseInsensitiveStringMap)
-      : ScanBuilder =
-    new NetcdfScanBuilder(paths, chunks, unitScale, expectAtoms)
-}
+/** `expectAtoms` is the `top=` topology's atom count (-1: no `top`). */
+class NetcdfCodec(opts: FrameOptions, expectAtoms: Int)
+    extends FrameCodec(opts) {
+  override def exts: Seq[String] = NetcdfTable.Extensions
 
-class NetcdfScanBuilder(paths: Seq[String], chunks: Int,
-    unitScale: Double, expectAtoms: Int)
-    extends ScanBuilder with SupportsPushDownRequiredColumns
-    with SupportsPushDownFilters with SupportsPushDownLimit {
-  private var required: StructType = NetcdfTable.Schema
-  private var frameLo: Long = 0L
-  private var frameHi: Long = Long.MaxValue // exclusive
-  private var limit: Int = -1
-  private var pushed: Array[Filter] = Array.empty
-
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    required = requiredSchema
-
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    filters.foreach {
-      case EqualTo("frame_id", v: Long) =>
-        frameLo = math.max(frameLo, v); frameHi = math.min(frameHi, v + 1)
-      case GreaterThan("frame_id", v: Long) =>
-        frameLo = math.max(frameLo, v + 1)
-      case GreaterThanOrEqual("frame_id", v: Long) =>
-        frameLo = math.max(frameLo, v)
-      case LessThan("frame_id", v: Long) =>
-        frameHi = math.min(frameHi, v)
-      case LessThanOrEqual("frame_id", v: Long) =>
-        frameHi = math.min(frameHi, v + 1)
-      case _ => ()
-    }
-    pushed = filters.filter {
-      case EqualTo("frame_id", _) | GreaterThan("frame_id", _) |
-           GreaterThanOrEqual("frame_id", _) | LessThan("frame_id", _) |
-           LessThanOrEqual("frame_id", _) => true
-      case _ => false
-    }
-    filters
+  private def profile(p: String): AmberProfile = {
+    val raf = FsIO.openRandom(p)
+    try AmberProfile.of(NetcdfFormat.readHeader(raf, p), p)
+    finally raf.close()
   }
-  override def pushedFilters(): Array[Filter] = pushed
 
-  override def pushLimit(l: Int): Boolean = { limit = l; false }
+  override def checkFiles(files: Seq[String]): Unit =
+    checkTop(files, expectAtoms)(profile(_).nAtoms)
 
-  override def build(): Scan =
-    new NetcdfScan(paths, chunks, unitScale, required, frameLo, frameHi,
-      limit, expectAtoms)
+  /** One header read gives (natoms, frames) — O(1) planning per file,
+    * the DCD/binpos shape (no index walk). */
+  override def probe(p: String, maxFrames: Long): FileFrames = {
+    val prof = profile(p)
+    FileFrames.uniform(prof.frames, prof.nAtoms)(NetcdfFrameRange(_, _, p, _))
+  }
+
+  override def reader(p: InputPartition, required: StructType)
+      : PartitionReader[InternalRow] =
+    new NetcdfPartitionReader(opts.unitScale, required,
+      p.asInstanceOf[NetcdfFrameRange])
 }
 
 /** startFrame/endFrame are LOCAL to `filePath`; `frameOffset` is the
@@ -383,79 +322,6 @@ class NetcdfScanBuilder(paths: Seq[String], chunks: Int,
   * arithmetic. */
 case class NetcdfFrameRange(startFrame: Long, endFrame: Long,
     filePath: String, frameOffset: Long) extends InputPartition
-
-class NetcdfScan(paths: Seq[String], chunks: Int, unitScale: Double,
-    required: StructType, frameLo: Long, frameHi: Long, limit: Int,
-    expectAtoms: Int)
-    extends Scan with Batch {
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
-
-  override def toMicroBatchStream(checkpointLocation: String)
-      : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    new NetcdfMicroBatchStream(
-      MultiPath.single("netcdf", paths, "streaming read"),
-      chunks, unitScale, required)
-
-  /** One header read per file gives (natoms, frames) — O(1) planning
-    * per shard, the DCD/binpos shape (no index walk). */
-  override def planInputPartitions(): Array[InputPartition] = {
-    val files = MultiPath.expandAll("netcdf", paths,
-      NetcdfTable.Extensions)
-    if (expectAtoms > 0) files.foreach { p =>
-      val raf = FsIO.openRandom(p)
-      try {
-        val prof = AmberProfile.of(NetcdfFormat.readHeader(raf, p), p)
-        if (prof.nAtoms != expectAtoms)
-          throw new IllegalArgumentException(
-            s"netcdf $p: file declares ${prof.nAtoms} atoms but the " +
-              s"topology declares atom count $expectAtoms (option 'top')")
-      } finally raf.close()
-    }
-    val budget0 = if (limit >= 0) limit.toLong else Long.MaxValue
-    val out = scala.collection.mutable.ArrayBuffer.empty[InputPartition]
-    var off = 0L
-    var budget = budget0
-    files.foreach { p =>
-      if (budget > 0 && off < frameHi) {
-        val raf = FsIO.openRandom(p)
-        val prof =
-          try AmberProfile.of(NetcdfFormat.readHeader(raf, p), p)
-          finally raf.close()
-        val lo = math.max(off, frameLo) - off
-        var hi = math.min(off + prof.frames, frameHi) - off
-        // a 0-atom file is format-legal but contributes no rows: plan
-        // nothing (also keeps the limit arithmetic division-safe)
-        if (prof.nAtoms == 0) hi = lo
-        if (lo < hi && budget != Long.MaxValue) {
-          val maxFrames = (budget + prof.nAtoms - 1) / prof.nAtoms
-          hi = math.min(hi, lo + maxFrames)
-        }
-        if (lo < hi) {
-          (lo until hi by chunks.toLong).foreach { start =>
-            out += NetcdfFrameRange(start,
-              math.min(start + chunks, hi), p, off)
-          }
-          if (budget != Long.MaxValue)
-            budget = math.max(0L, budget - (hi - lo) * prof.nAtoms)
-        }
-        off += prof.frames
-      }
-    }
-    out.toArray
-  }
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    new NetcdfReaderFactory(unitScale, required)
-}
-
-class NetcdfReaderFactory(unitScale: Double, required: StructType)
-    extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition)
-      : PartitionReader[InternalRow] =
-    new NetcdfPartitionReader(unitScale, required,
-      partition.asInstanceOf[NetcdfFrameRange])
-}
 
 /** Arithmetic positioned reads: coordinates slab at
   * `begin + frame × recSize`, one read per referenced variable per

@@ -4,13 +4,10 @@ import java.util
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read._
+import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader}
+import org.apache.spark.sql.connector.write.{LogicalWriteInfo, WriteBuilder}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
 /** DataSourceV2 connector for the PDB text format — the third entry of
@@ -43,39 +40,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * `.pdb.gz` is read transparently (same [[XyzLines]] machinery as xyz
   * and gro).
   */
-class PdbDataSource extends TableProvider with DataSourceRegister {
+class PdbDataSource extends FrameSource {
   override def shortName(): String = "pdb"
-
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    PdbTable.Schema
-
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: util.Map[String, String]): Table = {
-    val paths = MultiPath.rawPaths("pdb", properties)
-    val chunks = Option(properties.get("chunks")).map { v =>
-      try v.toInt catch {
-        case _: NumberFormatException => throw new IllegalArgumentException(
-          s"pdb option 'chunks' must be an integer, got '$v'")
-      }
-    }.getOrElse(10)
-    if (chunks <= 0) throw new IllegalArgumentException(
-      s"pdb option 'chunks' must be > 0, got $chunks")
-    val unitScale = Option(properties.get("unit_scale")).map { v =>
-      try v.toDouble catch {
-        case _: NumberFormatException => throw new IllegalArgumentException(
-          s"pdb option 'unit_scale' must be numeric, got '$v'")
-      }
-    }.getOrElse(0.1) // Å → nm, the PDB distance_unit
-    val mode = ParseMode.fromOptions("pdb", properties)
-    if (schema != null) {
-      val want = PdbTable.Schema.fields.map(f => (f.name, f.dataType)).toSeq
-      val got = schema.fields.map(f => (f.name, f.dataType)).toSeq
-      if (got != want) throw new IllegalArgumentException(
-        "pdb source has a fixed schema " + PdbTable.Schema.simpleString +
-          "; the supplied read schema does not match")
-    }
-    new PdbTable(paths, chunks, unitScale, mode)
-  }
+  override def schema: StructType = PdbTable.Schema
+  override def unitScale: Option[Double] = Some(0.1) // Å → nm
+  override def codec(opts: FrameOptions,
+      props: util.Map[String, String]): FrameCodec = new PdbCodec(opts)
 }
 
 object PdbTable {
@@ -100,122 +70,34 @@ object PdbTable {
     StructField("box_gamma", FloatType, nullable = true)))
 }
 
-class PdbTable(paths: Seq[String], chunks: Int, unitScale: Double,
-    mode: String = ParseMode.FailFast)
-    extends Table with SupportsRead
-    with org.apache.spark.sql.connector.catalog.SupportsWrite {
-  override def name(): String = s"pdb:${paths.mkString(",")}"
-  override def schema(): StructType = PdbTable.Schema
-  override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.BATCH_WRITE,
-      TableCapability.TRUNCATE, TableCapability.MICRO_BATCH_READ)
-  override def newScanBuilder(options: CaseInsensitiveStringMap)
-      : ScanBuilder = new PdbScanBuilder(paths, chunks, unitScale, mode)
-  override def newWriteBuilder(
-      info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
-      : org.apache.spark.sql.connector.write.WriteBuilder =
-    new PdbWriteBuilder(MultiPath.single("pdb", paths, "write"), info)
-}
+class PdbCodec(opts: FrameOptions) extends FrameCodec(opts) {
+  override def exts: Seq[String] = Seq(".pdb", ".pdb.gz")
 
-class PdbScanBuilder(paths: Seq[String], chunks: Int, unitScale: Double,
-    mode: String = ParseMode.FailFast)
-    extends ScanBuilder with SupportsPushDownRequiredColumns
-    with org.apache.spark.sql.connector.read.SupportsPushDownFilters {
-  private var required: StructType = PdbTable.Schema
-  private var frameLo: Long = 0L
-  private var frameHi: Long = Long.MaxValue // exclusive
-  private var pushed: Array[org.apache.spark.sql.sources.Filter] =
-    Array.empty
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    required = requiredSchema
-
-  /** frame_id predicates prune whole models from the plan (same
-    * contract as Xyz/GroScanBuilder); filters all stay residual. */
-  override def pushFilters(
-      filters: Array[org.apache.spark.sql.sources.Filter])
-      : Array[org.apache.spark.sql.sources.Filter] = {
-    import org.apache.spark.sql.sources._
-    filters.foreach {
-      case EqualTo("frame_id", v: Long) =>
-        frameLo = math.max(frameLo, v); frameHi = math.min(frameHi, v + 1)
-      case GreaterThan("frame_id", v: Long) =>
-        frameLo = math.max(frameLo, v + 1)
-      case GreaterThanOrEqual("frame_id", v: Long) =>
-        frameLo = math.max(frameLo, v)
-      case LessThan("frame_id", v: Long) =>
-        frameHi = math.min(frameHi, v)
-      case LessThanOrEqual("frame_id", v: Long) =>
-        frameHi = math.min(frameHi, v + 1)
-      case _ => ()
-    }
-    pushed = filters.filter {
-      case EqualTo("frame_id", _) | GreaterThan("frame_id", _) |
-           GreaterThanOrEqual("frame_id", _) | LessThan("frame_id", _) |
-           LessThanOrEqual("frame_id", _) => true
-      case _ => false
-    }
-    filters
-  }
-  override def pushedFilters(): Array[org.apache.spark.sql.sources.Filter] =
-    pushed
-
-  override def build(): Scan =
-    new PdbScan(paths, chunks, unitScale, required, mode, frameLo, frameHi)
-}
-
-/** One partition = a run of whole models; startLine is the absolute
-  * line index of the partition's first MODEL record (0 for the whole
-  * body of a MODEL-less file), so the reader seeks by line skip exactly
-  * like the xyz/gro positioned reads. */
-case class PdbFrameRange(startFrame: Long, endFrame: Long, startLine: Long,
-    boxA: Float, boxB: Float, boxC: Float,
-    boxAlpha: Float, boxBeta: Float, boxGamma: Float, hasBox: Boolean,
-    // startFrame/endFrame are LOCAL to the file; filePath (when
-    // non-null) overrides the scan path (directory-of-shards mode) and
-    // frameOffset is the global frame id of the file's frame 0
-    filePath: String = null, frameOffset: Long = 0L)
-    extends InputPartition
-
-class PdbScan(paths: Seq[String], chunks: Int, unitScale: Double,
-    required: StructType, mode: String = ParseMode.FailFast,
-    frameLo: Long = 0L, frameHi: Long = Long.MaxValue)
-    extends Scan with Batch {
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
-
-  /** Streaming twin (see PdbMicroBatchStream). */
-  override def toMicroBatchStream(checkpointLocation: String)
-      : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    new PdbMicroBatchStream(
-      MultiPath.single("pdb", paths, "streaming read"),
-      chunks, unitScale, required, mode)
-
-  /** Frame count of one file (streaming offset bookkeeping). */
-  private[sources] def planFrameCount(p: String): Long = {
-    val (starts, _, sawAtom) = probe(p)
-    if (sawAtom) starts.length.toLong else 0L
-  }
-
-  /** Driver-side probe: one pass records the CRYST1 box and the line
-    * index of every MODEL record — PDB frames are delimited, not
-    * fixed-length, so the chunk plan carries explicit line offsets
-    * (the shape of the reference's load_chunks dict,
-    * core/dask_traj.py:103-140, with byte seeks replaced by line
-    * seeks). */
-  /** Per-file probe: CRYST1 box + the line index of every MODEL record
-    * + whether any ATOM exists. */
-  private def probe(p: String): (IndexedSeq[Long],
-      Option[(Float, Float, Float, Float, Float, Float)], Boolean) = {
+  /** Driver-side probe: one pass records the CRYST1 box, the line index
+    * of every MODEL record and the ATOM/HETATM records inside each model
+    * — PDB frames are delimited, not fixed-length, so the chunk plan
+    * carries explicit line offsets (the shape of the reference's
+    * load_chunks dict, core/dask_traj.py:103-140, with byte seeks
+    * replaced by line seeks). A MODEL-less file is one frame starting at
+    * line 0; an ATOM-less file contributes no frames. */
+  override def probe(p: String, maxFrames: Long): FileFrames = {
     val src = XyzLines.open(p)
+    var box: Option[(Float, Float, Float, Float, Float, Float)] = None
+    val modelLines = scala.collection.mutable.ArrayBuffer.empty[Long]
+    // atoms inside the models before each MODEL record (a lower bound
+    // on the rows a reader emits before it: the limit never under-plans)
+    val atomsBefore = scala.collection.mutable.ArrayBuffer.empty[Long]
+    var atoms = 0L
+    var loose = 0L
+    var inModel = false
     try {
-      var box: Option[(Float, Float, Float, Float, Float, Float)] = None
-      val modelLines = scala.collection.mutable.ArrayBuffer.empty[Long]
-      var sawAtom = false
       var lineNo = 0L
       val it = src.getLines()
       while (it.hasNext) {
         val line = it.next()
-        if (line.startsWith("MODEL")) modelLines += lineNo
+        if (line.startsWith("MODEL")) {
+          modelLines += lineNo; atomsBefore += atoms; inModel = true
+        } else if (line.startsWith("ENDMDL")) inModel = false
         else if (line.startsWith("CRYST1") && box.isEmpty) {
           def f(lo: Int, hi: Int, scale: Double): Float = {
             val tok = line.substring(math.min(lo, line.length),
@@ -226,78 +108,54 @@ class PdbScan(paths: Seq[String], chunks: Int, unitScale: Double,
                   s"'$tok' (line: '${line.take(120)}')")
             }
           }
-          box = Some((f(6, 15, unitScale), f(15, 24, unitScale),
-            f(24, 33, unitScale), f(33, 40, 1.0), f(40, 47, 1.0),
+          box = Some((f(6, 15, opts.unitScale), f(15, 24, opts.unitScale),
+            f(24, 33, opts.unitScale), f(33, 40, 1.0), f(40, 47, 1.0),
             f(47, 54, 1.0)))
         } else if (line.startsWith("ATOM") || line.startsWith("HETATM")) {
-          sawAtom = true
+          if (inModel) atoms += 1 else loose += 1
         }
         lineNo += 1
       }
-      // a MODEL-less file is one frame starting at line 0
-      val starts: IndexedSeq[Long] =
-        if (modelLines.isEmpty) IndexedSeq(0L) else modelLines.toIndexedSeq
-      (starts, box, sawAtom)
     } finally src.close()
-  }
-
-  private def planFile(p: String, starts: IndexedSeq[Long],
-      box: Option[(Float, Float, Float, Float, Float, Float)],
-      off: Long): Seq[InputPartition] = {
-    val (ba, bb, bc, bal, bbe, bga) =
-      box.getOrElse((0f, 0f, 0f, 0f, 0f, 0f))
-    val lo = (math.max(off, frameLo) - off).toInt
-    val hi = (math.min(off + starts.length, frameHi) - off).toInt
-    if (lo >= hi) return Nil
-    (lo until hi by chunks).map { s =>
-      PdbFrameRange(s.toLong, math.min(s + chunks, hi).toLong,
-        starts(s), ba, bb, bc, bal, bbe, bga, box.isDefined, p, off)
-        : InputPartition
+    val sawAtom = atoms + loose > 0
+    val total = if (modelLines.isEmpty) loose else atoms
+    if (modelLines.isEmpty) { modelLines += 0L; atomsBefore += 0L }
+    val (ba, bb, bc, bal, bbe, bga) = box.getOrElse((0f, 0f, 0f, 0f, 0f, 0f))
+    new FileFrames {
+      def frames: Long = if (sawAtom) modelLines.length.toLong else 0L
+      def rowsBefore(frame: Long): Long =
+        if (frame < modelLines.length) atomsBefore(frame.toInt) else total
+      def partition(start: Long, end: Long, offset: Long): InputPartition =
+        PdbFrameRange(start, end, modelLines(start.toInt), ba, bb, bc, bal,
+          bbe, bga, box.isDefined, p, offset)
     }
   }
 
-  override def planInputPartitions(): Array[InputPartition] = {
-    // files/directories/lists/globs -> one ordered file list with
-    // globally contiguous frame ids (see XyzScan / MultiPath);
-    // ATOM-less files contribute no frames
-    val files = MultiPath.expandAll("pdb", paths, Seq(".pdb", ".pdb.gz"))
-    val out = scala.collection.mutable.ArrayBuffer.empty[InputPartition]
-    var off = 0L
-    files.foreach { p =>
-      if (off < frameHi) {
-        val (starts, box, sawAtom) = probe(p)
-        if (sawAtom) {
-          out ++= planFile(p, starts, box, off)
-          off += starts.length
-        }
-      }
-    }
-    out.toArray
-  }
-
-  override def supportedCustomMetrics()
-      : Array[org.apache.spark.sql.connector.metric.CustomMetric] =
-    ParseMode.scanMetrics
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    new PdbReaderFactory(paths.head, unitScale, required, mode)
-}
-
-class PdbReaderFactory(path: String, unitScale: Double,
-    required: StructType, mode: String = ParseMode.FailFast)
-    extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition)
+  override def reader(p: InputPartition, required: StructType)
       : PartitionReader[InternalRow] =
-    new PdbPartitionReader(path, unitScale, required,
-      partition.asInstanceOf[PdbFrameRange], mode)
+    new PdbPartitionReader(opts.unitScale, required,
+      p.asInstanceOf[PdbFrameRange], opts.mode)
+
+  override def sink: Option[(String, LogicalWriteInfo) => WriteBuilder] =
+    Some(new PdbWriteBuilder(_, _))
 }
+
+/** One partition = a run of whole models of `filePath`; startLine is the
+  * absolute line index of the partition's first MODEL record (0 for the
+  * whole body of a MODEL-less file), so the reader seeks by line skip
+  * exactly like the xyz/gro positioned reads. startFrame/endFrame are
+  * LOCAL to the file; frameOffset is the global frame id of its frame 0. */
+case class PdbFrameRange(startFrame: Long, endFrame: Long, startLine: Long,
+    boxA: Float, boxB: Float, boxC: Float,
+    boxAlpha: Float, boxBeta: Float, boxGamma: Float, hasBox: Boolean,
+    filePath: String, frameOffset: Long)
+    extends InputPartition
 
 /** Positioned chunk read: skip to the partition's first MODEL line,
   * then stream ATOM/HETATM records, closing frames at ENDMDL (or EOF
   * for MODEL-less files). */
-class PdbPartitionReader(path: String, unitScale: Double,
-    required: StructType, range: PdbFrameRange,
-    mode: String = ParseMode.FailFast)
+class PdbPartitionReader(unitScale: Double, required: StructType,
+    range: PdbFrameRange, mode: String)
     extends PartitionReader[InternalRow] {
 
   private val dropMalformed = mode == ParseMode.DropMalformed
@@ -305,8 +163,7 @@ class PdbPartitionReader(path: String, unitScale: Double,
   private var dropped = 0L
   private var coerced = 0L
 
-  // directory-of-shards partitions carry their own file path
-  private val file = if (range.filePath != null) range.filePath else path
+  private val file = range.filePath
   private val src = XyzLines.open(file)
   private val lines = src.getLines()
   (0L until range.startLine).foreach { _ =>

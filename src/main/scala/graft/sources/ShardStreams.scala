@@ -1,7 +1,8 @@
 package graft.sources
 
-import org.apache.spark.sql.connector.read.InputPartition
+import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFactory}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, ReadMaxFiles, SupportsAdmissionControl}
+import org.apache.spark.sql.types.StructType
 
 /** Session-conf plumbing shared by the shard-directory streams
   * (public: the conf key is user-facing surface, and the bench/spec
@@ -31,7 +32,7 @@ object ShardStreams {
     n
   }
 
-  /** The admission arithmetic shared by both offset shapes. Honors
+  /** The admission arithmetic of [[ShardDirMicroBatchStream]]. Honors
     * the ENGINE-passed limit only (ADVICE r16): the configured knob
     * already reaches the engine via `getDefaultReadLimit`, and the
     * engine deliberately overrides it — `Trigger.Once` passes
@@ -46,20 +47,25 @@ object ShardStreams {
     }
 }
 
-/** Shared skeleton for the micro-batch shard-directory streams
-  * (SURVEY §2.8): offsets are file counts over the name-sorted listing
-  * of a directory of immutable shard files; each micro-batch plans the
-  * new shards with the format's own batch planner, re-based so global
-  * frame ids continue across shards and micro-batches. Per-shard frame
-  * counts are cached per path (files are immutable), so consumed
-  * shards are never re-probed. Formats supply the extension filter,
-  * the frame-count probe, and the per-shard partition planner. */
+/** The micro-batch stream of every trajectory format (SURVEY §2.8):
+  * offsets are shard counts over the name-sorted listing of a directory
+  * of immutable shards (files; dtr frame sets); each micro-batch plans
+  * the new shards with the same [[FramePlan]] and codec cut as the batch
+  * scan, based so global frame ids continue across shards and
+  * micro-batches. Per-shard frame counts are cached per path (shards are
+  * immutable), so a consumed shard is probed again only after an
+  * offset-recovery restart. Shard names must arrive in ascending sort
+  * order (true for the write paths' zero-padded `part-NNNNN` names): a
+  * name sorting before consumed shards would shift the mapping.
+  *
+  * Usage: `spark.readStream.format(fmt).load(dir)`.
+  */
 case class ShardFileOffset(fileCount: Int) extends Offset {
   override def json(): String = fileCount.toString
 }
 
-private[sources] abstract class ShardDirMicroBatchStream(
-    dir: String, exts: Seq[String])
+private[sources] class ShardDirMicroBatchStream(dir: String,
+    codec: FrameCodec, required: StructType)
     extends MicroBatchStream with SupportsAdmissionControl {
 
   /** Captured at construction (driver-side, active session present). */
@@ -77,33 +83,14 @@ private[sources] abstract class ShardDirMicroBatchStream(
   override def reportLatestOffset(): Offset =
     ShardFileOffset(listShards().length)
 
-  /** Frames in one shard (driver-side probe; cached). Only consulted
-    * for PREDECESSOR shards whose count is not yet cached — i.e. after
-    * an offset-recovery restart; freshly planned shards derive their
-    * count from the partitions the scan just planned (one probe per
-    * new shard, not two). */
-  protected def probeFrames(path: String): Long
-
-  /** Batch partitions for one shard whose frame 0 has global id
-    * `base`. */
-  protected def planShard(path: String, base: Long): Array[InputPartition]
-
-  /** Shard-LOCAL end frame of one planned partition (streams plan the
-    * full shard — no pushdown — so the max over partitions IS the
-    * shard's frame count). */
-  protected def partitionLocalEnd(p: InputPartition): Long
-
-  private def listShards(): Seq[String] = {
+  private def listShards(): Seq[String] =
     if (!FsIO.isDirectory(dir)) Nil
-    else FsIO.list(dir)
-      .filter(e => e.isFile && exts.exists(e.name.endsWith))
-      .map(_.path)
-  }
+    else FsIO.list(dir).filter(codec.isShard).map(_.path)
 
   private val frameCache =
     scala.collection.mutable.HashMap.empty[String, Long]
-  private def frames(p: String): Long =
-    frameCache.getOrElseUpdate(p, probeFrames(p))
+  private def probeFrames(p: String): Long =
+    frameCache.getOrElseUpdate(p, codec.probe(p, Long.MaxValue).frames)
 
   override def initialOffset(): Offset = ShardFileOffset(0)
   override def latestOffset(): Offset =
@@ -116,158 +103,16 @@ private[sources] abstract class ShardDirMicroBatchStream(
     val s = start.asInstanceOf[ShardFileOffset].fileCount
     val e = end.asInstanceOf[ShardFileOffset].fileCount
     val shards = listShards()
-    var base = (0 until math.min(s, shards.length))
-      .map(i => frames(shards(i))).sum
-    (s until math.min(e, shards.length)).flatMap { i =>
-      val p = shards(i)
-      val parts = planShard(p, base)
-      val n = if (parts.isEmpty) 0L else parts.map(partitionLocalEnd).max
-      frameCache.put(p, n)
-      base += n
-      parts
-    }.toArray
+    val base = shards.take(s).map(probeFrames).sum
+    val windows = FramePlan.windows(codec, shards.slice(s, e), base, 0L,
+      Long.MaxValue, Long.MaxValue)
+    windows.foreach(w => frameCache.put(w.path, w.file.frames))
+    codec.cut(windows, codec.opts.chunks).toArray
   }
+
+  override def createReaderFactory(): PartitionReaderFactory =
+    new FrameReaderFactory(codec, required)
 
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()
-}
-
-/** pdb: delimited MODEL/ENDMDL frames — the probe is the batch scan's
-  * per-file pass (line offsets of every MODEL record). */
-class PdbMicroBatchStream(dir: String, chunks: Int, unitScale: Double,
-    schema: org.apache.spark.sql.types.StructType, mode: String)
-    extends ShardDirMicroBatchStream(dir, Seq(".pdb", ".pdb.gz")) {
-
-  private def scanFor(path: String) =
-    new PdbScan(Seq(path), chunks, unitScale, schema, mode)
-
-  override protected def probeFrames(path: String): Long =
-    scanFor(path).planFrameCount(path)
-
-  override protected def planShard(path: String, base: Long)
-      : Array[InputPartition] =
-    scanFor(path).planInputPartitions().map { p =>
-      val r = p.asInstanceOf[PdbFrameRange]
-      r.copy(frameOffset = base + r.frameOffset): InputPartition
-    }
-
-  override protected def partitionLocalEnd(p: InputPartition): Long =
-    p.asInstanceOf[PdbFrameRange].endFrame
-
-  override def createReaderFactory()
-      : org.apache.spark.sql.connector.read.PartitionReaderFactory =
-    new PdbReaderFactory(dir, unitScale, schema, mode)
-}
-
-/** lammpstrj: self-describing dump — probe reads the first-frame
-  * header and line-counts. */
-class LammpstrjMicroBatchStream(dir: String, chunks: Int,
-    unitScale: Double, schema: org.apache.spark.sql.types.StructType,
-    mode: String)
-    extends ShardDirMicroBatchStream(dir,
-      Seq(".lammpstrj", ".lammpstrj.gz")) {
-
-  private def scanFor(path: String) =
-    new LammpstrjScan(Seq(path), chunks, unitScale, schema, 0L,
-      Long.MaxValue, -1, mode)
-
-  override protected def probeFrames(path: String): Long =
-    scanFor(path).planFrameCount(path)
-
-  override protected def planShard(path: String, base: Long)
-      : Array[InputPartition] =
-    scanFor(path).planInputPartitions().map { p =>
-      val r = p.asInstanceOf[LammpstrjFrameRange]
-      r.copy(frameOffset = base + r.frameOffset): InputPartition
-    }
-
-  override protected def partitionLocalEnd(p: InputPartition): Long =
-    p.asInstanceOf[LammpstrjFrameRange].endFrame
-
-  override def createReaderFactory()
-      : org.apache.spark.sql.connector.read.PartitionReaderFactory =
-    new LammpstrjReaderFactory(dir, unitScale, schema, mode)
-}
-
-/** arc: Tinker archive — probe is the batch header+line-count pass. */
-class ArcMicroBatchStream(dir: String, chunks: Int, unitScale: Double,
-    schema: org.apache.spark.sql.types.StructType, mode: String)
-    extends ShardDirMicroBatchStream(dir, Seq(".arc", ".arc.gz")) {
-
-  private def scanFor(path: String) =
-    new ArcScan(Seq(path), chunks, unitScale, schema, 0L,
-      Long.MaxValue, -1, mode)
-
-  override protected def probeFrames(path: String): Long =
-    scanFor(path).planFrameCount(path)
-
-  override protected def planShard(path: String, base: Long)
-      : Array[InputPartition] =
-    scanFor(path).planInputPartitions().map { p =>
-      val r = p.asInstanceOf[ArcFrameRange]
-      r.copy(frameOffset = base + r.frameOffset): InputPartition
-    }
-
-  override protected def partitionLocalEnd(p: InputPartition): Long =
-    p.asInstanceOf[ArcFrameRange].endFrame
-
-  override def createReaderFactory()
-      : org.apache.spark.sql.connector.read.PartitionReaderFactory =
-    new ArcReaderFactory(unitScale, schema, mode)
-}
-
-/** mdcrd: AMBER fixed-width text — the natoms/box shape options ride
-  * the stream exactly as they ride the batch scan. */
-class MdcrdMicroBatchStream(dir: String, natoms: Int, box: Boolean,
-    chunks: Int, unitScale: Double,
-    schema: org.apache.spark.sql.types.StructType, mode: String)
-    extends ShardDirMicroBatchStream(dir,
-      Seq(".crd", ".mdcrd", ".crd.gz", ".mdcrd.gz")) {
-
-  private def scanFor(path: String) =
-    new MdcrdScan(Seq(path), natoms, box, chunks, unitScale, schema,
-      0L, Long.MaxValue, -1, mode)
-
-  override protected def probeFrames(path: String): Long =
-    scanFor(path).planFrameCount(path)
-
-  override protected def planShard(path: String, base: Long)
-      : Array[InputPartition] =
-    scanFor(path).planInputPartitions().map { p =>
-      val r = p.asInstanceOf[MdcrdFrameRange]
-      r.copy(frameOffset = base + r.frameOffset): InputPartition
-    }
-
-  override protected def partitionLocalEnd(p: InputPartition): Long =
-    p.asInstanceOf[MdcrdFrameRange].endFrame
-
-  override def createReaderFactory()
-      : org.apache.spark.sql.connector.read.PartitionReaderFactory =
-    new MdcrdReaderFactory(dir, natoms, box, unitScale, schema, mode)
-}
-
-/** binpos: fixed-stride binary — the probe is a header read + length
-  * arithmetic. */
-class BinposMicroBatchStream(dir: String, chunks: Int,
-    unitScale: Double, schema: org.apache.spark.sql.types.StructType)
-    extends ShardDirMicroBatchStream(dir, Seq(".binpos")) {
-
-  override protected def probeFrames(path: String): Long =
-    BinposTable.probe(path)._2
-
-  override protected def planShard(path: String, base: Long)
-      : Array[InputPartition] =
-    new BinposScan(Seq(path), chunks, unitScale, schema, 0L,
-      Long.MaxValue, -1)
-      .planInputPartitions().map { p =>
-        val r = p.asInstanceOf[BinposFrameRange]
-        r.copy(frameOffset = base + r.frameOffset): InputPartition
-      }
-
-  override protected def partitionLocalEnd(p: InputPartition): Long =
-    p.asInstanceOf[BinposFrameRange].endFrame
-
-  override def createReaderFactory()
-      : org.apache.spark.sql.connector.read.PartitionReaderFactory =
-    new BinposReaderFactory(unitScale, schema)
 }

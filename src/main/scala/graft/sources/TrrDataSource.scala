@@ -5,12 +5,8 @@ import java.nio.ByteBuffer
 import java.util
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.sources.{EqualTo, Filter, GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual, DataSourceRegister}
+import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader}
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 /** One parsed TRR frame header: the 13 XDR size/count ints plus the
   * derived real width and byte extents. `headerBytes` + `payloadBytes`
@@ -198,39 +194,13 @@ private[sources] object TrrFormat {
   *
   * Usage: `spark.read.format("trr").option("chunks", 100).load(path)`.
   */
-class TrrDataSource extends TableProvider with DataSourceRegister {
+class TrrDataSource extends FrameSource {
   override def shortName(): String = "trr"
-
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    TrrTable.Schema
-
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: util.Map[String, String]): Table = {
-    val paths = MultiPath.rawPaths("trr", properties)
-    val chunks = Option(properties.get("chunks")).map { v =>
-      try v.toInt catch {
-        case _: NumberFormatException => throw new IllegalArgumentException(
-          s"trr option 'chunks' must be an integer, got '$v'")
-      }
-    }.getOrElse(10)
-    if (chunks <= 0) throw new IllegalArgumentException(
-      s"trr option 'chunks' must be > 0, got $chunks")
-    val unitScale = Option(properties.get("unit_scale")).map { v =>
-      try v.toDouble catch {
-        case _: NumberFormatException => throw new IllegalArgumentException(
-          s"trr option 'unit_scale' must be numeric, got '$v'")
-      }
-    }.getOrElse(1.0) // file is already nm (GROMACS native units)
-    val mode = ParseMode.fromOptions("trr", properties)
-    if (schema != null) {
-      val want = TrrTable.Schema.fields.map(f => (f.name, f.dataType)).toSeq
-      val got = schema.fields.map(f => (f.name, f.dataType)).toSeq
-      if (got != want) throw new IllegalArgumentException(
-        "trr source has a fixed schema " + TrrTable.Schema.simpleString +
-          "; the supplied read schema does not match")
-    }
-    new TrrTable(paths, chunks, unitScale, mode)
-  }
+  override def schema: StructType = TrrTable.Schema
+  // file is already nm (GROMACS native units)
+  override def unitScale: Option[Double] = Some(1.0)
+  override def codec(opts: FrameOptions,
+      props: util.Map[String, String]): FrameCodec = new TrrCodec(opts)
 }
 
 object TrrTable {
@@ -263,63 +233,21 @@ object TrrTable {
     StructField("bv3z", FloatType, nullable = true)))
 }
 
-class TrrTable(paths: Seq[String], chunks: Int, unitScale: Double,
-    mode: String)
-    extends Table with SupportsRead {
-  override def name(): String = s"trr:${paths.mkString(",")}"
-  override def schema(): StructType = TrrTable.Schema
-  override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_READ,
-      TableCapability.MICRO_BATCH_READ)
-  override def newScanBuilder(options: CaseInsensitiveStringMap)
-      : ScanBuilder = new TrrScanBuilder(paths, chunks, unitScale, mode)
-}
+class TrrCodec(opts: FrameOptions) extends FrameCodec(opts) {
+  override def exts: Seq[String] = Seq(".trr")
 
-class TrrScanBuilder(paths: Seq[String], chunks: Int, unitScale: Double,
-    mode: String)
-    extends ScanBuilder with SupportsPushDownRequiredColumns
-    with SupportsPushDownFilters with SupportsPushDownLimit {
-  private var required: StructType = TrrTable.Schema
-  private var frameLo: Long = 0L
-  private var frameHi: Long = Long.MaxValue // exclusive
-  private var limit: Int = -1
-  private var pushed: Array[Filter] = Array.empty
+  /** One driver-side index walk per file (cached, see
+    * [[TrrFormat.indexCached]]); a pushed frame bound stops the walk at
+    * `maxFrames`. Each partition carries its first frame's byte offset. */
+  override def probe(p: String, maxFrames: Long): FileFrames =
+    FileFrames.indexed(TrrFormat.indexCached(p, opts.mode, maxFrames),
+      (h: TrrFrameHeader) => if (h.xSize > 0) h.nAtoms.toLong else 0L)(
+      TrrFrameRange(_, _, _, p, _))
 
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    required = requiredSchema
-
-  /** frame_id predicates bound both the partition plan AND the index
-    * walk itself — an upper frame bound means the driver never reads
-    * headers past it. */
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    filters.foreach {
-      case EqualTo("frame_id", v: Long) =>
-        frameLo = math.max(frameLo, v); frameHi = math.min(frameHi, v + 1)
-      case GreaterThan("frame_id", v: Long) =>
-        frameLo = math.max(frameLo, v + 1)
-      case GreaterThanOrEqual("frame_id", v: Long) =>
-        frameLo = math.max(frameLo, v)
-      case LessThan("frame_id", v: Long) =>
-        frameHi = math.min(frameHi, v)
-      case LessThanOrEqual("frame_id", v: Long) =>
-        frameHi = math.min(frameHi, v + 1)
-      case _ => ()
-    }
-    pushed = filters.filter {
-      case EqualTo("frame_id", _) | GreaterThan("frame_id", _) |
-           GreaterThanOrEqual("frame_id", _) | LessThan("frame_id", _) |
-           LessThanOrEqual("frame_id", _) => true
-      case _ => false
-    }
-    filters
-  }
-  override def pushedFilters(): Array[Filter] = pushed
-
-  override def pushLimit(l: Int): Boolean = { limit = l; false }
-
-  override def build(): Scan =
-    new TrrScan(paths, chunks, unitScale, required, frameLo, frameHi, limit,
-      mode)
+  override def reader(p: InputPartition, required: StructType)
+      : PartitionReader[InternalRow] =
+    new TrrPartitionReader(opts.unitScale, required,
+      p.asInstanceOf[TrrFrameRange], opts.mode)
 }
 
 /** startFrame/endFrame are LOCAL to `filePath`; `startByte` is the
@@ -327,87 +255,6 @@ class TrrScanBuilder(paths: Seq[String], chunks: Int, unitScale: Double,
   * `frameOffset` the global frame id of the file's frame 0. */
 case class TrrFrameRange(startFrame: Long, endFrame: Long, startByte: Long,
     filePath: String, frameOffset: Long) extends InputPartition
-
-class TrrScan(paths: Seq[String], chunks: Int, unitScale: Double,
-    required: StructType, frameLo: Long, frameHi: Long, limit: Int,
-    mode: String)
-    extends Scan with Batch {
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
-
-  /** Streaming twin: the (single) path is a directory that `*.trr`
-    * shard files appear in (see TrrMicroBatchStream). */
-  override def toMicroBatchStream(checkpointLocation: String)
-      : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    new TrrMicroBatchStream(
-      MultiPath.single("trr", paths, "streaming read"),
-      chunks, unitScale, required, mode)
-
-  /** Plans one file from its frame index: clamp to the pushed frame
-    * range, honor a pushed limit via the index's cumulative row counts,
-    * and cut `chunks`-frame partitions each carrying its own byte
-    * offset. Returns the planned partitions and the rows they cover. */
-  private def planFile(p: String,
-      idx: IndexedSeq[(Long, Long, TrrFrameHeader)], off: Long,
-      rowBudget: Long): (Seq[InputPartition], Long) = {
-    val lo = math.max(off, frameLo) - off
-    var hi = math.min(off + idx.length, frameHi) - off
-    if (lo >= hi) return (Nil, 0L)
-    if (rowBudget != Long.MaxValue) {
-      val base = idx(lo.toInt)._2
-      var h = lo
-      while (h < hi && idx(h.toInt)._2 - base < rowBudget) h += 1
-      hi = h
-    }
-    if (lo >= hi) return (Nil, 0L)
-    val parts = (lo until hi by chunks.toLong).map { start =>
-      TrrFrameRange(start, math.min(start + chunks, hi),
-        idx(start.toInt)._1, p, off): InputPartition
-    }
-    val rows = idx(hi.toInt - 1)._2 - idx(lo.toInt)._2 +
-      (if (idx(hi.toInt - 1)._3.xSize > 0) idx(hi.toInt - 1)._3.nAtoms
-       else 0)
-    (parts, rows)
-  }
-
-  /** One driver-side index walk per file plans every partition; a
-    * directory plans its `*.trr` shards in name order with globally
-    * contiguous frame ids (see XyzScan). Pushed frame/limit bounds
-    * stop the walk early — the last shard the bound reaches is the
-    * last one indexed. */
-  override def planInputPartitions(): Array[InputPartition] = {
-    // files/directories/lists/globs -> one ordered file list with
-    // globally contiguous frame ids (see XyzScan / MultiPath)
-    val files = MultiPath.expandAll("trr", paths, Seq(".trr"))
-    val budget0 = if (limit >= 0) limit.toLong else Long.MaxValue
-    val out = scala.collection.mutable.ArrayBuffer.empty[InputPartition]
-    var off = 0L
-    var budget = budget0
-    files.foreach { p =>
-      if (budget > 0 && off < frameHi) {
-        val idx = TrrFormat.indexCached(p, mode,
-          if (frameHi == Long.MaxValue) Long.MaxValue else frameHi - off)
-        val (parts, rows) = planFile(p, idx, off, budget)
-        out ++= parts
-        if (budget != Long.MaxValue) budget = math.max(0L, budget - rows)
-        off += idx.length
-      }
-    }
-    out.toArray
-  }
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    new TrrReaderFactory(unitScale, required, mode)
-}
-
-class TrrReaderFactory(unitScale: Double, required: StructType,
-    mode: String)
-    extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition)
-      : PartitionReader[InternalRow] =
-    new TrrPartitionReader(unitScale, required,
-      partition.asInstanceOf[TrrFrameRange], mode)
-}
 
 /** Positioned read of a variable-record range: one seek to the
   * partition's indexed byte offset, then sequential header+payload

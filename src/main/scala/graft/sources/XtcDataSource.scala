@@ -4,12 +4,8 @@ import java.nio.ByteBuffer
 import java.util
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.sources.{EqualTo, Filter, GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual, DataSourceRegister}
+import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader}
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 /** One parsed XTC frame: header fields plus the byte extents needed to
   * seek to the next frame without decoding the payload. For compressed
@@ -555,41 +551,14 @@ object XtcFormat {
   *
   * Usage: `spark.read.format("xtc").option("chunks", 100).load(path)`.
   */
-class XtcDataSource extends TableProvider with DataSourceRegister {
+class XtcDataSource extends FrameSource {
   override def shortName(): String = "xtc"
-
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    XtcTable.Schema
-
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: util.Map[String, String]): Table = {
-    val paths = MultiPath.rawPaths("xtc", properties)
-    val chunks = Option(properties.get("chunks")).map { v =>
-      try v.toInt catch {
-        case _: NumberFormatException => throw new IllegalArgumentException(
-          s"xtc option 'chunks' must be an integer, got '$v'")
-      }
-    }.getOrElse(10)
-    if (chunks <= 0) throw new IllegalArgumentException(
-      s"xtc option 'chunks' must be > 0, got $chunks")
-    val unitScale = Option(properties.get("unit_scale")).map { v =>
-      try v.toDouble catch {
-        case _: NumberFormatException => throw new IllegalArgumentException(
-          s"xtc option 'unit_scale' must be numeric, got '$v'")
-      }
-    }.getOrElse(1.0) // file is already nm (GROMACS native units)
-    val mode = ParseMode.fromOptions("xtc", properties)
-    if (schema != null) {
-      val want = XtcTable.Schema.fields.map(f => (f.name, f.dataType)).toSeq
-      val got = schema.fields.map(f => (f.name, f.dataType)).toSeq
-      if (got != want) throw new IllegalArgumentException(
-        "xtc source has a fixed schema " + XtcTable.Schema.simpleString +
-          "; the supplied read schema does not match")
-    }
-    val expectAtoms = Option(properties.get("top"))
-      .map(PdbTopology.atomCount).getOrElse(-1)
-    new XtcTable(paths, chunks, unitScale, mode, expectAtoms)
-  }
+  override def schema: StructType = XtcTable.Schema
+  // file is already nm (GROMACS native units)
+  override def unitScale: Option[Double] = Some(1.0)
+  override def codec(opts: FrameOptions,
+      props: util.Map[String, String]): FrameCodec =
+    new XtcCodec(opts, topAtoms(props))
 }
 
 object XtcTable {
@@ -615,63 +584,26 @@ object XtcTable {
     StructField("bv3z", FloatType, nullable = true)))
 }
 
-class XtcTable(paths: Seq[String], chunks: Int, unitScale: Double,
-    mode: String, expectAtoms: Int = -1)
-    extends Table with SupportsRead {
-  override def name(): String = s"xtc:${paths.mkString(",")}"
-  override def schema(): StructType = XtcTable.Schema
-  override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_READ,
-      TableCapability.MICRO_BATCH_READ)
-  override def newScanBuilder(options: CaseInsensitiveStringMap)
-      : ScanBuilder =
-    new XtcScanBuilder(paths, chunks, unitScale, mode, expectAtoms)
-}
+/** `expectAtoms` is the `top=` topology's atom count (-1: no `top`). */
+class XtcCodec(opts: FrameOptions, expectAtoms: Int)
+    extends FrameCodec(opts) {
+  override def exts: Seq[String] = Seq(".xtc")
 
-class XtcScanBuilder(paths: Seq[String], chunks: Int, unitScale: Double,
-    mode: String, expectAtoms: Int = -1)
-    extends ScanBuilder with SupportsPushDownRequiredColumns
-    with SupportsPushDownFilters with SupportsPushDownLimit {
-  private var required: StructType = XtcTable.Schema
-  private var frameLo: Long = 0L
-  private var frameHi: Long = Long.MaxValue // exclusive
-  private var limit: Int = -1
-  private var pushed: Array[Filter] = Array.empty
+  /** top= validates EVERY named file — including shards a pushed
+    * limit/frame bound prunes from the plan (one 8-byte probe each). */
+  override def checkFiles(files: Seq[String]): Unit =
+    checkTop(files, expectAtoms)(XtcFormat.probeNatoms)
 
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    required = requiredSchema
+  /** The TRR planning shape: a cached driver-side index walk over
+    * variable-size frames, bounded by `maxFrames`. */
+  override def probe(p: String, maxFrames: Long): FileFrames =
+    FileFrames.indexed(XtcFormat.indexCached(p, opts.mode, maxFrames),
+      (m: XtcFrameMeta) => m.nAtoms.toLong)(XtcFrameRange(_, _, _, p, _))
 
-  /** frame_id predicates bound both the partition plan AND the index
-    * walk itself (see TrrScanBuilder). */
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    filters.foreach {
-      case EqualTo("frame_id", v: Long) =>
-        frameLo = math.max(frameLo, v); frameHi = math.min(frameHi, v + 1)
-      case GreaterThan("frame_id", v: Long) =>
-        frameLo = math.max(frameLo, v + 1)
-      case GreaterThanOrEqual("frame_id", v: Long) =>
-        frameLo = math.max(frameLo, v)
-      case LessThan("frame_id", v: Long) =>
-        frameHi = math.min(frameHi, v)
-      case LessThanOrEqual("frame_id", v: Long) =>
-        frameHi = math.min(frameHi, v + 1)
-      case _ => ()
-    }
-    pushed = filters.filter {
-      case EqualTo("frame_id", _) | GreaterThan("frame_id", _) |
-           GreaterThanOrEqual("frame_id", _) | LessThan("frame_id", _) |
-           LessThanOrEqual("frame_id", _) => true
-      case _ => false
-    }
-    filters
-  }
-  override def pushedFilters(): Array[Filter] = pushed
-
-  override def pushLimit(l: Int): Boolean = { limit = l; false }
-
-  override def build(): Scan =
-    new XtcScan(paths, chunks, unitScale, required, frameLo, frameHi, limit,
-      mode, expectAtoms)
+  override def reader(p: InputPartition, required: StructType)
+      : PartitionReader[InternalRow] =
+    new XtcPartitionReader(opts.unitScale, required,
+      p.asInstanceOf[XtcFrameRange], opts.mode)
 }
 
 /** startFrame/endFrame are LOCAL to `filePath`; `startByte` is the
@@ -679,82 +611,6 @@ class XtcScanBuilder(paths: Seq[String], chunks: Int, unitScale: Double,
   * `frameOffset` the global frame id of the file's frame 0. */
 case class XtcFrameRange(startFrame: Long, endFrame: Long, startByte: Long,
     filePath: String, frameOffset: Long) extends InputPartition
-
-class XtcScan(paths: Seq[String], chunks: Int, unitScale: Double,
-    required: StructType, frameLo: Long, frameHi: Long, limit: Int,
-    mode: String, expectAtoms: Int = -1)
-    extends Scan with Batch {
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
-
-  override def toMicroBatchStream(checkpointLocation: String)
-      : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    new XtcMicroBatchStream(
-      MultiPath.single("xtc", paths, "streaming read"),
-      chunks, unitScale, required, mode)
-
-  private def planFile(p: String,
-      idx: IndexedSeq[(Long, Long, XtcFrameMeta)], off: Long,
-      rowBudget: Long): (Seq[InputPartition], Long) = {
-    val lo = math.max(off, frameLo) - off
-    var hi = math.min(off + idx.length, frameHi) - off
-    if (lo >= hi) return (Nil, 0L)
-    if (rowBudget != Long.MaxValue) {
-      val base = idx(lo.toInt)._2
-      var h = lo
-      while (h < hi && idx(h.toInt)._2 - base < rowBudget) h += 1
-      hi = h
-    }
-    if (lo >= hi) return (Nil, 0L)
-    val parts = (lo until hi by chunks.toLong).map { start =>
-      XtcFrameRange(start, math.min(start + chunks, hi),
-        idx(start.toInt)._1, p, off): InputPartition
-    }
-    val rows = idx(hi.toInt - 1)._2 - idx(lo.toInt)._2 +
-      idx(hi.toInt - 1)._3.nAtoms
-    (parts, rows)
-  }
-
-  override def planInputPartitions(): Array[InputPartition] = {
-    val files = MultiPath.expandAll("xtc", paths, Seq(".xtc"))
-    // top= validates EVERY named file — including shards a pushed
-    // limit/frame bound would prune from the plan (binpos parity; one
-    // 8-byte probe per file, only when top= was given)
-    if (expectAtoms > 0) files.foreach { p =>
-      val n = XtcFormat.probeNatoms(p)
-      if (n != expectAtoms) throw new IllegalArgumentException(
-        s"xtc $p: header declares $n atoms but the topology " +
-          s"declares atom count $expectAtoms (option 'top')")
-    }
-    val budget0 = if (limit >= 0) limit.toLong else Long.MaxValue
-    val out = scala.collection.mutable.ArrayBuffer.empty[InputPartition]
-    var off = 0L
-    var budget = budget0
-    files.foreach { p =>
-      if (budget > 0 && off < frameHi) {
-        val idx = XtcFormat.indexCached(p, mode,
-          if (frameHi == Long.MaxValue) Long.MaxValue else frameHi - off)
-        val (parts, rows) = planFile(p, idx, off, budget)
-        out ++= parts
-        if (budget != Long.MaxValue) budget = math.max(0L, budget - rows)
-        off += idx.length
-      }
-    }
-    out.toArray
-  }
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    new XtcReaderFactory(unitScale, required, mode)
-}
-
-class XtcReaderFactory(unitScale: Double, required: StructType,
-    mode: String)
-    extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition)
-      : PartitionReader[InternalRow] =
-    new XtcPartitionReader(unitScale, required,
-      partition.asInstanceOf[XtcFrameRange], mode)
-}
 
 /** Positioned read of a variable-record range: one seek to the
   * partition's indexed byte offset, then sequential frame decode —

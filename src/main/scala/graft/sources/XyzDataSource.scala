@@ -3,12 +3,9 @@ package graft.sources
 import java.util
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.sources.{DataSourceRegister, EqualTo, Filter, GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual}
+import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader}
+import org.apache.spark.sql.connector.write.{LogicalWriteInfo, WriteBuilder}
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
 import scala.io.Source
@@ -54,16 +51,21 @@ private[sources] object ParseMode {
   val DropMalformed = "DROPMALFORMED"
   val CoerceWarn = "COERCEWARN"
 
-  def fromOptions(fmt: String, properties: java.util.Map[String, String])
-      : String =
-    Option(properties.get("mode")).map(_.toUpperCase) match {
-      case None | Some(FailFast) => FailFast
-      case Some(DropMalformed) => DropMalformed
-      case Some(CoerceWarn) => CoerceWarn
-      case Some(other) => throw new IllegalArgumentException(
-        s"$fmt option 'mode' must be FAILFAST, DROPMALFORMED or " +
-          s"COERCEWARN, got '$other'")
-    }
+  val All: Seq[String] = Seq(FailFast, DropMalformed, CoerceWarn)
+
+  /** The `mode` option, refused unless it is one of the `supported`
+    * modes the format's readers implement (FAILFAST always is). */
+  def fromOptions(fmt: String, properties: java.util.Map[String, String],
+      supported: Seq[String]): String = {
+    val mode = Option(properties.get("mode")).map(_.toUpperCase)
+      .getOrElse(FailFast)
+    if (!supported.contains(mode)) throw new IllegalArgumentException(
+      s"$fmt option 'mode' must be ${supported.mkString(" or ")}" +
+        (if (supported.size < All.size)
+          s" ($fmt has no drop or coerce path)" else "") +
+        s", got '$mode'")
+    mode
+  }
 
   /** Lexical coercions for convertible-but-mistyped numeric tokens, in
     * priority order. Each rule targets one real-world mistyping:
@@ -131,8 +133,9 @@ private[sources] case class ParseTaskMetric(metricName: String, v: Long)
   * (SURVEY §2.1 S1–S5):
   *
   *  - `load` / length probe (core/dask_traj.py:61-100) →
-  *    `XyzScan.planInputPartitions`: probe the frame count once on the
-  *    driver, emit one `InputPartition` per `chunks` frames;
+  *    `XyzCodec.probe` under [[FrameSource]]'s planner: probe the frame
+  *    count once on the driver, emit one `InputPartition` per `chunks`
+  *    frames;
   *  - `read_chunk` positioned read (core/dask_traj.py:329-361) →
   *    `XyzPartitionReader`: each task skips to its frame range and
   *    parses only its own frames;
@@ -156,47 +159,12 @@ private[sources] case class ParseTaskMetric(metricName: String, v: Long)
   * layout a 100 TB trajectory actually has, and what the write path
   * produces.
   */
-class XyzDataSource extends TableProvider with DataSourceRegister {
+class XyzDataSource extends FrameSource {
   override def shortName(): String = "xyz"
-
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    XyzTable.Schema
-
-  /** Plan-time option validation. The source's fixed schema must match
-    * a user-supplied one exactly (erroring beats silently ignoring it).
-    * Paths: a file, a directory of shards, a `load(paths: _*)` list, or
-    * a trailing-segment glob — all resolved by [[MultiPath]] with
-    * globally contiguous frame ids across files. */
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: util.Map[String, String]): Table = {
-    val paths = MultiPath.rawPaths("xyz", properties)
-    def intOpt(key: String, default: Int): Int =
-      Option(properties.get(key)).map { v =>
-        try v.toInt catch {
-          case _: NumberFormatException => throw new IllegalArgumentException(
-            s"xyz option '$key' must be an integer, got '$v'")
-        }
-      }.getOrElse(default)
-    val chunks = intOpt("chunks", 10)
-    if (chunks <= 0) throw new IllegalArgumentException(
-      s"xyz option 'chunks' must be > 0, got $chunks")
-    val unitScale = Option(properties.get("unit_scale")).map { v =>
-      try v.toDouble catch {
-        case _: NumberFormatException => throw new IllegalArgumentException(
-          s"xyz option 'unit_scale' must be numeric, got '$v'")
-      }
-    }.getOrElse(1.0)
-    val mode = ParseMode.fromOptions("xyz", properties)
-    if (schema != null) {
-      val want = XyzTable.Schema.fields.map(f => (f.name, f.dataType)).toSeq
-      val got = schema.fields.map(f => (f.name, f.dataType)).toSeq
-      if (got != want) throw new IllegalArgumentException(
-        "xyz source has a fixed schema " + XyzTable.Schema.simpleString +
-          "; the supplied read schema " + schema.simpleString +
-          " does not match (drop .schema(...) or make it identical)")
-    }
-    new XyzTable(paths, chunks, unitScale, mode)
-  }
+  override def schema: StructType = XyzTable.Schema
+  override def unitScale: Option[Double] = Some(1.0)
+  override def codec(opts: FrameOptions,
+      props: util.Map[String, String]): FrameCodec = new XyzCodec(opts)
 }
 
 object XyzTable {
@@ -216,185 +184,46 @@ object XyzTable {
     StructField("box_z", FloatType, nullable = true)))
 }
 
-class XyzTable(paths: Seq[String], chunks: Int, unitScale: Double,
-    mode: String = ParseMode.FailFast)
-    extends Table with SupportsRead
-    with org.apache.spark.sql.connector.catalog.SupportsWrite {
-  override def name(): String = s"xyz:${paths.mkString(",")}"
-  override def schema(): StructType = XyzTable.Schema
-  // batch reads take files/directories/lists/globs; streaming reads and
-  // writes take a SINGLE directory of immutable shard files
-  override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.BATCH_WRITE,
-      TableCapability.TRUNCATE, TableCapability.MICRO_BATCH_READ)
-  override def newScanBuilder(options: CaseInsensitiveStringMap)
-      : ScanBuilder = new XyzScanBuilder(paths, chunks, unitScale, mode)
-  override def newWriteBuilder(
-      info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
-      : org.apache.spark.sql.connector.write.WriteBuilder =
-    new XyzWriteBuilder(MultiPath.single("xyz", paths, "write"), info)
-}
-
-class XyzScanBuilder(paths: Seq[String], chunks: Int, unitScale: Double,
-    mode: String = ParseMode.FailFast)
-    extends ScanBuilder with SupportsPushDownRequiredColumns
-    with SupportsPushDownFilters with SupportsPushDownLimit {
-  private var required: StructType = XyzTable.Schema
-  private var frameLo: Long = 0L
-  private var frameHi: Long = Long.MaxValue // exclusive
-  private var limit: Int = -1
-  private var pushed: Array[Filter] = Array.empty
-
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    // preserve pruning even when the requested set is empty (count(*))
-    required = requiredSchema
-
-  /** Frame-range predicate pushdown → partition pruning (the pushdown
-    * the reference lists as TODO, core/dask_traj.py:126 / SURVEY O5).
-    * Filters are only used to SHRINK the planned frame range; they are
-    * all returned as residuals so Spark still applies them exactly. */
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    filters.foreach {
-      case EqualTo("frame_id", v: Long) =>
-        frameLo = math.max(frameLo, v); frameHi = math.min(frameHi, v + 1)
-      case GreaterThan("frame_id", v: Long) =>
-        frameLo = math.max(frameLo, v + 1)
-      case GreaterThanOrEqual("frame_id", v: Long) =>
-        frameLo = math.max(frameLo, v)
-      case LessThan("frame_id", v: Long) =>
-        frameHi = math.min(frameHi, v)
-      case LessThanOrEqual("frame_id", v: Long) =>
-        frameHi = math.min(frameHi, v + 1)
-      case _ => ()
-    }
-    pushed = filters.filter {
-      case EqualTo("frame_id", _) | GreaterThan("frame_id", _) |
-           GreaterThanOrEqual("frame_id", _) | LessThan("frame_id", _) |
-           LessThanOrEqual("frame_id", _) => true
-      case _ => false
-    }
-    filters // all residual: Spark re-evaluates, pruning is plan-only
-  }
-  override def pushedFilters(): Array[Filter] = pushed
-
-  /** Partial limit pushdown: plan only enough frames to cover the
-    * limit; Spark keeps its own Limit above. */
-  override def pushLimit(l: Int): Boolean = { limit = l; false }
-
-  override def build(): Scan =
-    new XyzScan(paths, chunks, unitScale, required, frameLo, frameHi, limit,
-      mode)
-}
-
-/** One chunk of frames. startFrame/endFrame are LOCAL to the file;
-  * `filePath` (when non-null) overrides the scan path — used by the
-  * directory-of-shards mode — and `frameOffset` is the global frame id
-  * of the file's frame 0, so emitted frame_ids are globally contiguous
-  * across shards. */
-case class XyzFrameRange(startFrame: Long, endFrame: Long, nAtoms: Int,
-    filePath: String = null, frameOffset: Long = 0L)
-    extends InputPartition
-
-class XyzScan(paths: Seq[String], chunks: Int, unitScale: Double,
-    required: StructType, frameLo: Long = 0L,
-    frameHi: Long = Long.MaxValue, limit: Int = -1,
-    mode: String = ParseMode.FailFast)
-    extends Scan with Batch {
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
-
-  /** Streaming twin: the (single) path is a directory of shard files
-    * (see XyzMicroBatchStream). */
-  override def toMicroBatchStream(checkpointLocation: String)
-      : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    new XyzMicroBatchStream(
-      MultiPath.single("xyz", paths, "streaming read"),
-      chunks, unitScale, required)
+class XyzCodec(opts: FrameOptions) extends FrameCodec(opts) {
+  override def exts: Seq[String] = Seq(".xyz", ".xyz.gz")
 
   /** Driver-side length probe (the analog of opening the file to read
-    * `len(f)`, core/dask_traj.py:86): one cheap line-count pass per
-    * file. The planned range is then clipped by pushed frame_id
-    * predicates and a pushed limit — chunk pruning at plan time
-    * (SURVEY O3/O5). */
-  private def probe(p: String): (Int, Long) = {
+    * `len(f)`, core/dask_traj.py:86): one cheap line-count pass. */
+  override def probe(p: String, maxFrames: Long): FileFrames = {
     val src = XyzLines.open(p)
-    try {
+    val (nAtoms, nFrames) = try {
       val it = src.getLines()
-      if (!it.hasNext) return (0, 0L)
-      val nAtoms = it.next().trim.toInt
-      var lines = 1L
-      while (it.hasNext) { it.next(); lines += 1 }
-      (nAtoms, lines / (nAtoms + 2))
-    } finally src.close()
-  }
-
-  /** Chunk plan for one file whose frame 0 has global id `off`,
-    * clipped against the GLOBAL pushed frame range and a row budget.
-    * Returns the partitions and the rows they will produce (for limit
-    * accounting). */
-  private def planFile(p: String, nAtoms: Int, nFrames: Long, off: Long,
-      rowBudget: Long): (Seq[InputPartition], Long) = {
-    var lo = math.max(off, frameLo)
-    var hi = math.min(off + nFrames, frameHi)
-    if (rowBudget != Long.MaxValue && nAtoms > 0) {
-      val needed = (rowBudget + nAtoms - 1) / nAtoms
-      hi = math.min(hi, lo + math.max(needed, 1L))
-    }
-    if (lo >= hi || nAtoms <= 0) return (Nil, 0L)
-    val parts = (lo until hi by chunks.toLong).map { start =>
-      XyzFrameRange(start - off, math.min(start + chunks, hi) - off,
-        nAtoms, p, off): InputPartition
-    }
-    (parts, (hi - lo) * nAtoms)
-  }
-
-  override def planInputPartitions(): Array[InputPartition] = {
-    // Many-files batch read — directories of shards, explicit path
-    // lists and globs all resolve to one ordered file list (the shape
-    // data has at scale, and what the write path produces). Frame ids
-    // are GLOBAL: file k's frames continue where file k-1 ended, so a
-    // split trajectory reads back as ONE trajectory. Pushed frame_id
-    // predicates prune whole files (probing stops at the range's upper
-    // bound) and a pushed limit stops planning once covered.
-    val files = MultiPath.expandAll("xyz", paths, Seq(".xyz", ".xyz.gz"))
-    val budget0 = if (limit >= 0) limit.toLong else Long.MaxValue
-    val out = scala.collection.mutable.ArrayBuffer.empty[InputPartition]
-    var off = 0L
-    var budget = budget0
-    files.foreach { p =>
-      if (budget > 0 && off < frameHi) {
-        val (nAtoms, nFrames) = probe(p)
-        val (parts, rows) = planFile(p, nAtoms, nFrames, off, budget)
-        out ++= parts
-        if (budget != Long.MaxValue) budget = math.max(0L, budget - rows)
-        off += nFrames
+      if (!it.hasNext) (0, 0L)
+      else {
+        val nAtoms = it.next().trim.toInt
+        var lines = 1L
+        while (it.hasNext) { it.next(); lines += 1 }
+        (nAtoms, lines / (nAtoms + 2))
       }
-    }
-    out.toArray
+    } finally src.close()
+    FileFrames.uniform(nFrames, nAtoms)(
+      XyzFrameRange(_, _, nAtoms, p, _))
   }
 
-  override def supportedCustomMetrics()
-      : Array[org.apache.spark.sql.connector.metric.CustomMetric] =
-    ParseMode.scanMetrics
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    new XyzReaderFactory(paths.head, unitScale, required, mode)
-}
-
-class XyzReaderFactory(path: String, unitScale: Double,
-    required: StructType, mode: String = ParseMode.FailFast)
-    extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition)
+  override def reader(p: InputPartition, required: StructType)
       : PartitionReader[InternalRow] =
-    new XyzPartitionReader(path, unitScale, required,
-      partition.asInstanceOf[XyzFrameRange], mode)
+    new XyzPartitionReader(opts.unitScale, required,
+      p.asInstanceOf[XyzFrameRange], opts.mode)
+
+  override def sink: Option[(String, LogicalWriteInfo) => WriteBuilder] =
+    Some(new XyzWriteBuilder(_, _))
 }
+
+/** One chunk of frames of `filePath`. startFrame/endFrame are LOCAL to
+  * the file and `frameOffset` is the global frame id of the file's frame
+  * 0, so emitted frame_ids are globally contiguous across files. */
+case class XyzFrameRange(startFrame: Long, endFrame: Long, nAtoms: Int,
+    filePath: String, frameOffset: Long) extends InputPartition
 
 /** Positioned chunk read (core/dask_traj.py:329-361): skip to the
   * partition's first frame, parse frames until the range ends. */
-class XyzPartitionReader(path: String, unitScale: Double,
-    required: StructType, range: XyzFrameRange,
-    mode: String = ParseMode.FailFast)
+class XyzPartitionReader(unitScale: Double, required: StructType,
+    range: XyzFrameRange, mode: String)
     extends PartitionReader[InternalRow] {
 
   private val dropMalformed = mode == ParseMode.DropMalformed
@@ -402,8 +231,7 @@ class XyzPartitionReader(path: String, unitScale: Double,
   private var dropped = 0L
   private var coerced = 0L
 
-  // directory-of-shards partitions carry their own file path
-  private val file = if (range.filePath != null) range.filePath else path
+  private val file = range.filePath
   private val src = XyzLines.open(file)
   private val lines = src.getLines()
   private val frameLines = range.nAtoms + 2
