@@ -25,7 +25,8 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *  - the Table, its capabilities, and the write hand-off;
   *  - column pruning, frame_id range pushdown (saturating at the Long
   *    bounds; every filter stays residual, so Spark re-applies it) and
-  *    partial limit pushdown (plan only the frames that cover the rows);
+  *    partial limit pushdown (plan only the frames that cover the rows;
+  *    off under DROPMALFORMED, where a frame may yield fewer rows);
   *  - planning: [[MultiPath]] expansion, one probe per file, globally
   *    contiguous frame ids across files, and cutting each file's frame
   *    window into `chunks`-frame partitions;
@@ -313,8 +314,13 @@ private[sources] class FrameScanBuilder(paths: Seq[String],
   override def pushedFilters(): Array[Filter] = pushed
 
   /** Partial: plan only enough frames to cover the limit; Spark keeps
-    * its own Limit above. */
-  override def pushLimit(l: Int): Boolean = { limit = l; false }
+    * its own Limit above. Not under DROPMALFORMED: a probe counts the
+    * rows a frame holds, not the rows left after dropped records, so
+    * the planned frames could hold fewer than the limit. */
+  override def pushLimit(l: Int): Boolean = {
+    if (codec.opts.mode != ParseMode.DropMalformed) limit = l
+    false
+  }
 
   override def build(): Scan =
     new FrameScan(paths, codec, required, lo, hi, limit)

@@ -84,8 +84,9 @@ class PdbCodec(opts: FrameOptions) extends FrameCodec(opts) {
     val src = XyzLines.open(p)
     var box: Option[(Float, Float, Float, Float, Float, Float)] = None
     val modelLines = scala.collection.mutable.ArrayBuffer.empty[Long]
-    // atoms inside the models before each MODEL record (a lower bound
-    // on the rows a reader emits before it: the limit never under-plans)
+    // atoms inside the models before each MODEL record: a lower bound
+    // on the rows a reader emits before it, except under DROPMALFORMED,
+    // where a pushed limit does not plan by it
     val atomsBefore = scala.collection.mutable.ArrayBuffer.empty[Long]
     var atoms = 0L
     var loose = 0L

@@ -1,6 +1,7 @@
 package graft
 
-import java.nio.file.{Files, Path}
+import java.nio.{ByteBuffer, ByteOrder}
+import java.nio.file.{Files, Path, Paths}
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.connector.catalog.TableProvider
@@ -17,7 +18,8 @@ import graft.sources.{DcdWrite, Hdf5Write, NetcdfWrite, TrrWrite, XtcWrite}
   * for each format registered in META-INF/services: frame_id bounds read
   * exactly the rows of an unpushed filter and plan no partition outside
   * the range (saturating at Long.MaxValue), a pushed limit plans fewer
-  * partitions, `count()` works with every column pruned, and bad options
+  * partitions but never too few rows (also when DROPMALFORMED drops a
+  * record), `count()` works with every column pruned, and bad options
   * fail at load with the format's name in the message.
   *
   * Each fixture holds 6 frames × 3 atoms in two or more files, written
@@ -158,6 +160,50 @@ class FrameSourceContractSpec extends AnyFunSuite {
   private def fixture(fmt: String): Fixture = fixtures.getOrElse(fmt,
     fail(s"registered format '$fmt' has no contract fixture"))
 
+  /** A copy of the fixture with frame 0 of its first file malformed: in
+    * text files atom 0's y token (the only 1.01 nm / 10.1 Å value) turns
+    * to letters; in dcd the first record marker of frame 0 is wrong; in
+    * trr and xtc the frame magic is. */
+  private def malformed(fmt: String): String = {
+    val src = Paths.get(fixture(fmt).path)
+    val dir = tmp(s"${fmt}_bad")
+    val names = {
+      val s = Files.list(src)
+      try s.toArray.map(p => p.asInstanceOf[Path].getFileName.toString)
+        .sorted.toSeq
+      finally s.close()
+    }
+    names.foreach(n => Files.copy(src.resolve(n), dir.resolve(n)))
+    val first = dir.resolve(names.find(_.startsWith("part-")).getOrElse(
+      fail(s"$fmt fixture has no part- file")))
+    fmt match {
+      case "dcd" =>
+        val b = Files.readAllBytes(first)
+        val le = ByteBuffer.wrap(b).order(ByteOrder.LITTLE_ENDIAN).getInt == 84
+        val bb = ByteBuffer.wrap(b)
+          .order(if (le) ByteOrder.LITTLE_ENDIAN else ByteOrder.BIG_ENDIAN)
+        // header, title and atom-count records precede frame 0
+        (0 until 3).foreach { _ =>
+          val n = bb.getInt; bb.position(bb.position() + n + 4)
+        }
+        bb.putInt(bb.position(), -1)
+        Files.write(first, b)
+      case "trr" | "xtc" =>
+        val b = Files.readAllBytes(first)
+        ByteBuffer.wrap(b).putInt(0, 0)
+        Files.write(first, b)
+      case _ =>
+        val text = Files.readString(first)
+        val tok = "\\S+".r.findAllMatchIn(text).find { m =>
+          m.matched.toDoubleOption.exists(v =>
+            math.abs(v - 1.01) < 1e-3 || math.abs(v - 10.1) < 1e-3)
+        }.getOrElse(fail(s"$fmt fixture has no atom-0 y token to corrupt"))
+        Files.writeString(first, text.patch(tok.start,
+          "x" * tok.matched.length, tok.matched.length))
+    }
+    dir.toString
+  }
+
   private def read(fmt: String, extra: Map[String, String] = Map.empty)
       : DataFrame = {
     val fx = fixture(fmt)
@@ -249,6 +295,23 @@ class FrameSourceContractSpec extends AnyFunSuite {
       assert(scanPartitions(limited) < scanPartitions(read(fmt)),
         s"$fmt: limit planned ${scanPartitions(limited)} partitions")
     }
+
+    if (!failFastOnly(fmt))
+      test(s"$fmt: limit(n) under DROPMALFORMED returns n rows when frame " +
+        "0 holds a malformed record") {
+        val fx = fixture(fmt)
+        val path = malformed(fmt)
+        def drop() = spark.read.format(fmt)
+          .options(fx.options + ("chunks" -> "1") +
+            ("mode" -> "DROPMALFORMED"))
+          .load(path)
+        val kept = drop().collect().length
+        assert(kept < Frames * Atoms, s"$fmt: the malformed record was kept")
+        Seq(Atoms, kept).foreach { n =>
+          assert(drop().limit(n).collect().length == n,
+            s"$fmt: limit($n) returned too few rows")
+        }
+      }
 
     test(s"$fmt: count() with every column pruned") {
       assert(read(fmt).count() == Frames * Atoms)
